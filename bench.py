@@ -20,8 +20,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import statistics
-import subprocess
 import sys
 import time
 
@@ -209,6 +207,7 @@ N_RUNS = 3
 # - d10 has no checkpoint, but repeated collect() of one DataFrame
 #   reuses materialized shuffle stages and times only the tail;
 #   rebuilding per run prices the whole candidate + verify pipeline.
+# The one list: tools/scale_proof.py imports it too.
 EAGER_BUILD = {
     "d4_dedup_ngram_jaccard",
     "d7_dedup_components",
@@ -288,6 +287,12 @@ EAGER_BUILD = {
     # p27 runs the full sink write at build — rebuild prices the
     # assign + stage + commit, not just the read-back aggregate
     "p27_shard_export",
+    # Timed by tools/scale_proof.py only (not in EXTENSION):
+    # x13's only heavy stage is one shuffle join a repeated collect()
+    # would reuse (the d10 pitfall); p20 runs its sync write at build
+    # (run_job inside the op), so build-once prices only the reconcile
+    "x13_fuzzy_match",
+    "p20_sync_reconcile",
 }
 
 
@@ -304,15 +309,6 @@ EAGER_BUILD = {
 # where pickling measurably dominates.) So w1 keeps collect() timing,
 # comparable to BASELINE.md and every prior round, and tightens the
 # min estimator with more timed runs instead.
-#
-# d7/d9 drift A/B (r12 verdict item 2): the two closure ops moved up
-# two rounds running (d7 2.44 -> 2.97 s, d9 3.54 -> 4.12 s) with no
-# plan change. A/B'd round 13 on a quiet machine — r11 tree vs r13
-# tree, fresh process each, 5 timed runs after warm-up at sf0.1:
-# d7 min 3.302 s (r11) vs 3.139 s (r13), d9 4.594 s (r11) vs 3.962 s
-# (r13). The CURRENT tree is faster than the r11 tree on both ops,
-# so the recorded drift is day-band machine noise, not a code
-# regression — within band, closed.
 N_RUNS_OVERRIDE = {"w1_order_rank": 9}
 
 # Round-14 measurement fix (guide §1.4): w4/w8 emit 600k rows —
@@ -330,64 +326,6 @@ N_RUNS_OVERRIDE = {"w1_order_rank": 9}
 # outputs are <= ~100k rows where w1's A/B showed the DataSourceV2
 # noop write path costs MORE than the pickling it avoids).
 SINK_NOOP = {"w4_range_frame", "w8_range_frame_scalable"}
-
-
-# Round-15 measurement fix (VERDICT r14 "What's wrong" #1, declared):
-# the single-session flagship numbers drifted upward three rounds
-# running (0.55 -> 0.59 -> 0.68 -> 0.70 s) with zero flagship code or
-# plan changes — sub-100 ms entries are dominated by JVM warmth and
-# scheduling jitter (the documented ~2.5x cross-layout band), so the
-# per-round flagship delta kept flagging phantom regressions while
-# real wins only showed up via interleaved fresh-subprocess A/Bs. The
-# flagship line is now the per-query MEDIAN over
-# $SPARK_GRAFT_BENCH_SUBPROC_REPS (default 3) FRESH subprocesses,
-# each of which replays the historical layout exactly (cold JVM,
-# flagships first, same _bench_one warm-up + best-of-3 collect()
-# method), so each rep is directly comparable to BASELINE.md and to
-# every prior round's number — the median just strips the day-band
-# jitter between cold JVMs. Set the env var to 0 to get the old
-# single-session numbers (also the automatic fallback if a subprocess
-# fails); the parent's single-session flagship values are always kept
-# in BENCH_latest_full.json under "flagship_singlesession". The
-# stdout one-line JSON contract and $SPARK_GRAFT_SF_DIR /
-# $SPARK_GRAFT_CPUS are unchanged.
-SUBPROC_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_SUBPROC_REPS", "3"))
-
-_SUBPROC_MARK = "@@FLAGSHIP_REP@@"
-
-_SUBPROC_CHILD = """
-import json, sys
-sys.path.insert(0, {repo!r})
-import bench
-from hive_to_es_spark.registry import queries
-from hive_to_es_spark.session import get_spark
-spark = get_spark("bench-flagship-rep")
-spark.sparkContext.setLogLevel("ERROR")
-qs = queries()
-out = {{n: bench._bench_one(spark, qs, n) for n in bench.FLAGSHIPS}}
-print({mark!r} + json.dumps(out))
-"""
-
-
-def _flagship_subprocess_reps(n_reps: int) -> list[dict[str, float]]:
-    """Run the 7 flagships in n_reps fresh subprocesses (cold JVM each,
-    flagships-first layout) and return the per-rep {name: best_sec}
-    dicts. Reps that fail to produce the marker line are dropped."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    code = _SUBPROC_CHILD.format(repo=repo, mark=_SUBPROC_MARK)
-    reps: list[dict[str, float]] = []
-    for _ in range(n_reps):
-        r = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            check=False,
-        )
-        for line in r.stdout.splitlines():
-            if line.startswith(_SUBPROC_MARK):
-                reps.append(json.loads(line[len(_SUBPROC_MARK):]))
-                break
-    return reps
 
 
 def _run_action(df, name: str) -> None:
@@ -437,15 +375,6 @@ def main() -> int:
     per_query: dict[str, float] = {}
     for name in FLAGSHIPS + EXTENSION:
         per_query[name] = _bench_one(spark, qs, name)
-    flagship_singlesession = {n: per_query[n] for n in FLAGSHIPS}
-    flagship_reps: list[dict[str, float]] = []
-    if SUBPROC_REPS > 0:
-        flagship_reps = _flagship_subprocess_reps(SUBPROC_REPS)
-        if flagship_reps:  # fallback: keep single-session numbers
-            for n in FLAGSHIPS:
-                per_query[n] = round(
-                    statistics.median(r[n] for r in flagship_reps), 4
-                )
     flagship_total = round(sum(per_query[n] for n in FLAGSHIPS), 4)
     # The driver records only the TAIL of stdout, so the per-round
     # artifact must stay compact enough that the gate-relevant numbers
@@ -462,8 +391,6 @@ def main() -> int:
         "queries": per_query,
         "extended_total_sec": round(sum(per_query[n] for n in EXTENSION), 4),
         "sf": sf,
-        "flagship_singlesession": flagship_singlesession,
-        "flagship_subproc_reps": flagship_reps,
     }
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_latest_full.json"),
@@ -483,50 +410,8 @@ def main() -> int:
                 ),
                 "full_detail": "BENCH_latest_full.json",
                 "sf": sf,
-                "flagship_method": (
-                    f"median-of-{len(flagship_reps)}-fresh-subprocess"
-                    if flagship_reps
-                    else "single-session best-of-3"
-                ),
-                # Round-4 VERDICT asked for the r3->r4 extended-set
-                # drift (s2 1.8x, d1 1.74x, d6 1.55x, w4 1.61x, e1
-                # 1.29x) to be attributed. tools/bench_drift.py A/B
-                # (round 5; fresh subprocess per variant, 5 runs each):
-                # a session that has already run the full bench layout
-                # reproduces r3's numbers almost exactly (s2 0.055 vs
-                # r3 0.051; d1 0.024 vs 0.022), a fresh minimal session
-                # is ~2x slower on the sub-100ms ops, and lifecycle
-                # sweeps are NEUTRAL (with_sweeps ~= isolated). So the
-                # drift is JVM/JIT warmth depth — how much code the JVM
-                # compiled before the op ran — plus w4's eager-build
-                # reclassification (all build-once variants reproduce
-                # r3's 2.2s; the r4 3.57s includes the gate job + full
-                # rebuild per timed run, by design). Expected bands:
-                # same-layout reruns +-20%; cross-layout comparisons of
-                # sub-100ms ops up to ~2.5x. Gate on the 2x bound vs
-                # BASELINE.md flagships, not extended-set deltas.
-                # Round-7 w8 drift check (VERDICT r6 task 3): the r5->r6
-                # w8 move (2.74->3.35s, +22%) was re-A/B'd with fresh
-                # subprocesses running the EXACT r5 tree vs the current
-                # tree on the same day: r5 code 3.23-3.98s, current
-                # 3.28-4.23s — indistinguishable. The move is
-                # day/machine variance, not a code regression (w8's
-                # source was untouched in r6; its bucket-parallel plan
-                # shape stays pinned in test_plans.py).
-                # Round-8 dedup-family drift check (VERDICT r7 task 4):
-                # the uniform r6->r7 +10-35% on d4/d7/d9/d10/d11/d12
-                # was re-A/B'd with the same methodology — interleaved
-                # fresh subprocesses, EXACT r6 tree (54f7229) vs the
-                # round-8 tree, same day, eager-rebuild best-of-3 at
-                # sf0.1 (r6-tree vs current, two reps each):
-                # d4 3.46/3.62 vs 3.69/3.56; d7 3.19/3.96 vs 3.23/3.84;
-                # d9 4.06/4.71 vs 4.40/4.56; d10 1.95/2.14 vs 1.86/2.15;
-                # d11 1.60/1.82 vs 1.43/1.97; d12 2.54/2.89 vs 2.30/2.82.
-                # The between-tree gap is SMALLER than the within-tree
-                # rep spread on every op (current faster on several) —
-                # the r6->r7 drift is day variance, not a regression.
                 "notes": "sub-100ms ops vary up to ~2.5x with JVM warmth across "
-                "session layouts (tools/bench_drift.py); same-layout +-20%; "
+                "session layouts; same-layout +-20%; "
                 "multi-sec ops vary ~+-25% across days (w8 A/B round 7; "
                 "dedup-family A/B round 8 — r6 tree vs r8 tree "
                 "indistinguishable, within-tree spread > between-tree gap)",

@@ -243,11 +243,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
 # Sinks (reference pipeline stage p7, SURVEY.md §2.A)
 # ---------------------------------------------------------------------------
 
-def write_parquet_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Parquet sink — the test-env stand-in for the ES bulk sink."""
-    df.write.mode(mode).parquet(path)
-
-
 def es_writer_options(
     index: str,
     *,

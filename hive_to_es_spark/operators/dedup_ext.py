@@ -1732,8 +1732,9 @@ FROM assigned s LEFT JOIN dominated dm ON s.vec_id = dm.v
 def semantic_dedup(e: DataFrame) -> DataFrame:
     """d17's core over an embeddings frame (vec_id, embedding, label)
     — factored from the registered op so the SCALE ladder can drive it
-    over a GROWN-codebook corpus (tools/scale_d17_grownk.py: k ∝ n
-    cells, the IVF sizing discipline the 100 TB argument rests on).
+    over a GROWN-codebook corpus (docs/SCALE.md "d17 grown-codebook
+    rung": k ∝ n cells, the IVF sizing discipline the 100 TB argument
+    rests on).
     The codebook is the per-label centroid table, so cell count scales
     with the label domain of the input."""
     from hive_to_es_spark.operators.similarity import _ivf_codebook, _l2
@@ -1854,10 +1855,10 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the rest of the plan is unchanged; AQE may still broadcast at runtime
 # if the REAL hot set turns out tiny — gating on measured size is the
 # correct behavior). Threshold arithmetic is MEASURED, not guessed
-# (tools/scale_d18_k50.py, round 13; docs/SCALE.md "paper-shape
-# rung"): hot-set bytes grow linearly with corpus docs (fitted
-# exponent 1.05) at ~200 B/doc for the Lee-et-al. k=50 span shape and
-# ~65 B/doc at the fixture k=5 shape, so 1M docs put ~65-200 MB of
+# (docs/SCALE.md "d18 paper-shape rung", round 13): hot-set bytes
+# grow linearly with corpus docs (fitted exponent 1.05) at ~200 B/doc
+# for the Lee-et-al. k=50 span shape and ~65 B/doc at the fixture k=5
+# shape, so 1M docs put ~65-200 MB of
 # gram strings (a few hundred MB with join-relation overhead) on the
 # broadcast side — safely inside executor memory — while the open-web
 # regime (10M+ docs, duplicated mass a large corpus fraction) lands

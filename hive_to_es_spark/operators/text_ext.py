@@ -239,101 +239,13 @@ def _bigrams_from_chars(ch_col: str = "_ch"):
     )
 
 
-def choose_langid_plan(n_splits: int) -> str:
-    """Pure gate decision for langid_predictions' auto mode (the
-    choose_jaccard_plan discipline — unit-testable without building
-    either plan): the join topology wins on 1-split inputs (the local
-    fixture case — an eager profile collect would serialize against
-    scans that otherwise overlap inside one job, measured p26
-    6.6 -> 9.0 s in round 14); the zero-corpus-exchange scan-side
-    form wins once the scan actually has parallel splits (no
-    corpus-sized checkpoint, no corpus exchange — two straight scans
-    and one bounded census collect)."""
-    return "scan" if n_splits > 1 else "join"
-
-
-def _langid_scan_side(d: DataFrame) -> DataFrame:
-    """Scan-side langid (the round-14 literal-compile recipe, shipped
-    round 15 behind the split-count gate): collect the bounded
-    top-20-per-lang bigram profile (one census pass, map-combined
-    aggregate — the only exchange touches <=distinct-bigram rows,
-    never the corpus), then compile the profile into literal
-    contains() overlap columns and take the argmax IN-ROW. For
-    length-2 grams substring containment == bigram membership, so the
-    output is row-identical to the join topology (pinned by
-    test_langid_scan_join_parity): docs with zero profile overlap are
-    excluded exactly like the join arm (no scores rows), NULL /
-    length<=1 texts match nothing, and the tie-break (overlap DESC,
-    profile_lang ASC) is encoded as array_max over (overlap,
-    -lang_index) structs. The scoring pass itself is pure projection:
-    zero exchanges, no join, no window — at scale the corpus is
-    scanned twice and shuffled never."""
-    bigrams = (
-        d.select("doc_id", "lang", F.split("text", "").alias("_ch"))
-        .select("doc_id", "lang", F.explode(_bigrams_from_chars()).alias("bg"))
-    )
-    w_prof = Window.partitionBy("lang").orderBy(
-        F.col("n").desc(), F.col("bg").asc()
-    )
-    profile_rows = (
-        bigrams.groupBy("lang", "bg")
-        .agg(F.count("*").alias("n"))
-        .select("lang", "bg", F.row_number().over(w_prof).alias("rn"))
-        .filter(F.col("rn") <= 20)
-        .select(F.col("lang").alias("profile_lang"), "bg")
-        .collect()
-    )
-    langs = sorted({r.profile_lang for r in profile_rows})
-    by_lang = {
-        lang: sorted(r.bg for r in profile_rows if r.profile_lang == lang)
-        for lang in langs
-    }
-    text = F.col("text")
-    cands = F.array(
-        *[
-            F.struct(
-                F.size(
-                    F.filter(
-                        F.array(*[F.lit(bg) for bg in by_lang[lang]]),
-                        lambda bg: F.contains(text, bg),
-                    )
-                ).alias("o"),
-                F.lit(-i).alias("ni"),
-            )
-            for i, lang in enumerate(langs)
-        ]
-    )
-    best = F.array_max(cands)
-    lang_arr = F.array(*[F.lit(lang) for lang in langs])
-    return (
-        d.select(
-            "doc_id",
-            "lang",
-            best["o"].alias("_o"),
-            F.element_at(lang_arr, (-best["ni"] + 1).cast("int")).alias(
-                "predicted"
-            ),
-        )
-        .filter(F.col("_o") >= 1)
-        .drop("_o")
-    )
-
-
-def langid_predictions(d: DataFrame, plan: str = "auto") -> DataFrame:
+def langid_predictions(d: DataFrame) -> DataFrame:
     """Per-document n-gram language-ID predictions (doc_id, lang,
     predicted): per-language character-bigram profiles, docs scored by
     top-20-profile overlap, deterministic argmax. Shared by t7
     (confusion counts), t3 (routing on the PREDICTION — the honest
     langid-filter shape: production never has the true label) and
     p26's lang gate.
-
-    `plan`: "join" (the checkpoint-shared join topology below),
-    "scan" (the zero-corpus-exchange literal-compile form —
-    _langid_scan_side), or "auto" (default): pick by the input's
-    actual scan split count via choose_langid_plan — 1-split local
-    fixtures keep the join plan that measures faster there,
-    multi-split production inputs get the scan-side plan (VERDICT r14
-    task 6). Both arms are row-identical (parity-pinned in tests).
 
     Round 14 made bigram GENERATION O(len) per document via the
     pre-split char array (_bigrams_from_chars — substr-by-index was
@@ -359,11 +271,6 @@ def langid_predictions(d: DataFrame, plan: str = "auto") -> DataFrame:
     at sf0.1: 2.5-3.2 s -> 1.9-2.1 s."""
     from hive_to_es_spark.functions.lifecycle import materialize
 
-    if plan == "auto":
-        plan = choose_langid_plan(d.rdd.getNumPartitions())
-    if plan == "scan":
-        return _langid_scan_side(d)
-    assert plan == "join", f"unknown langid_predictions plan {plan!r}"
     bgs = materialize(
         d.select("doc_id", "lang", F.split("text", "").alias("_ch"))
         .select("doc_id", "lang", _bigrams_from_chars().alias("_bgs")),

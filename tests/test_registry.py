@@ -139,6 +139,24 @@ def test_deprecated_keys_quarantined():
         assert k in oracles(include_deprecated=True)
 
 
+def test_bench_key_lists_name_registered_ops():
+    """The hand-kept key lists in bench.py and tools/scale_proof.py must
+    name registered operators: a stale name fails here, not mid-bench.
+    scale_proof still times the deprecated w7, so its lists are checked
+    against the include_deprecated view."""
+    import bench
+    from tools import scale_proof
+
+    public = set(queries())
+    for name in ("FLAGSHIPS", "EXTENSION", "EAGER_BUILD", "SINK_NOOP", "N_RUNS_OVERRIDE"):
+        stale = set(getattr(bench, name)) - public
+        assert not stale, f"bench.{name} names unregistered keys: {sorted(stale)}"
+    every = set(queries(include_deprecated=True))
+    for name in ("OPS", "SCALE16_OPS", "SINK_TIMED"):
+        stale = set(getattr(scale_proof, name)) - every
+        assert not stale, f"scale_proof.{name} names unregistered keys: {sorted(stale)}"
+
+
 def test_oracle_coverage():
     os_ = oracles()
     for key in EXPECTED_KEYS - ROWS_ONLY:

@@ -153,12 +153,12 @@ def test_range_frame_includes_peers(spark):
 
 @pytest.mark.parametrize("mode", ["overwrite", "append"])
 def test_parquet_sink_modes(spark, tmp_path, mode):
-    from hive_to_es_spark.io import write_parquet_sink
+    from hive_to_es_spark.pipeline import Job, write_sink
 
     df = spark.createDataFrame([(1,), (2,)], "v INT")
     path = str(tmp_path / "sink")
-    write_parquet_sink(df, path, mode="overwrite")
-    write_parquet_sink(df, path, mode=mode)
+    write_sink(df, Job(name="sink_modes", sink_path=path, mode="overwrite"))
+    write_sink(df, Job(name="sink_modes", sink_path=path, mode=mode))
     n = spark.read.parquet(path).count()
     assert n == (4 if mode == "append" else 2)
 
@@ -3508,47 +3508,23 @@ def test_d20_skew_arm_equals_window_arm(spark, sf_dir):
     assert base == skew
 
 
-def test_langid_plan_gate_and_scan_join_parity(spark, sf_dir):
-    """VERDICT r14 task 6: langid_predictions' split-count gate and
-    the scan-side literal-compile arm. (a) choose_langid_plan: 1-split
-    inputs keep the join topology (local fixtures — an eager profile
-    collect serializes against 1-task scans), multi-split inputs get
-    the zero-corpus-exchange scan plan. (b) Parity: both arms must be
-    row-identical on the fixtures (substring containment of a 2-char
-    gram == bigram membership, same overlap counts, same tie-break,
-    same zero-overlap exclusions). (c) The auto gate actually routes a
-    multi-split input to the scan arm, whose scoring pass plans ZERO
-    Exchange / Join / Window."""
+def test_langid_multisplit_parity(spark, sf_dir):
+    """langid_predictions on a multi-split input returns exactly the
+    rows of the single-split run. Every fixture scans as one split, so
+    without the repartition the profile aggregate, the broadcast score
+    join and both row_number windows never see rows spread across
+    tasks."""
     from hive_to_es_spark.io import load_tables
-    from hive_to_es_spark.operators.text_ext import (
-        choose_langid_plan,
-        langid_predictions,
-    )
-
-    assert choose_langid_plan(1) == "join"
-    assert choose_langid_plan(2) == "scan"
-    assert choose_langid_plan(32) == "scan"
+    from hive_to_es_spark.operators.text_ext import langid_predictions
 
     d = load_tables(spark, sf_dir).documents
-    join_rows = sorted(
-        (r.doc_id, r.lang, r.predicted)
-        for r in langid_predictions(d, plan="join").collect()
-    )
-    scan_df = langid_predictions(d, plan="scan")
-    scan_rows = sorted(
-        (r.doc_id, r.lang, r.predicted) for r in scan_df.collect()
-    )
-    assert join_rows == scan_rows
-    assert len(join_rows) > 0
-    plan_txt = scan_df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan_txt, plan_txt
-    assert "Join" not in plan_txt, plan_txt
-    assert "Window" not in plan_txt, plan_txt
-    # the auto gate routes a multi-split frame to the scan arm: its
-    # plan has no shuffle join (the join arm's score join would)
-    auto_multi = langid_predictions(d.repartition(4), plan="auto")
-    auto_txt = auto_multi._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in auto_txt, auto_txt
+
+    def rows(df):
+        return sorted((r.doc_id, r.lang, r.predicted) for r in df.collect())
+
+    base = rows(langid_predictions(d))
+    assert len(base) > 0
+    assert rows(langid_predictions(d.repartition(4))) == base
 
 
 def test_split_empty_separator_pin():

@@ -11,7 +11,7 @@ Runs every registered query on Spark and its oracle SQL on DuckDB
 
 Usage: python tools/check.py [key ...]   (default: all registered)
        SF_DIR=/root/testdata/sf0.01 python tools/check.py
-       python tools/check.py --json CHECK_r4.json \
+       python tools/check.py --json CHECK_rN.json \
            --sf-dirs /root/testdata/sf0.01,/root/testdata/sf0.1
 
 --json writes a machine-readable artifact covering EVERY registered

@@ -21,7 +21,7 @@ costs only its own keys (retried once) and is LABELED failed rather
 than poisoning the rest.
 
 Usage:
-  python tools/run_check_scale16x.py CHECK_r12_scale16x.json [key ...]
+  python tools/run_check_scale16x.py CHECK_rN_scale16x.json [key ...]
 (~hours for the full inventory; do NOT edit hive_to_es_spark/ modules
 while it runs. Pass explicit keys for a subset run — the artifact then
 records exactly those keys.)

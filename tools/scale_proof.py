@@ -30,8 +30,14 @@ pair-count model, so bounding blocks bounds runtime.
 
 Ops that materialize at DataFrame-build time (d4's eager shingle
 checkpoint, d7/d9's propagation loop) are rebuilt inside the timed
-section (EAGER_BUILD — same rule as bench.py), so the published
-numbers include the work that actually dominates them.
+section (bench.EAGER_BUILD, shared with bench.py), so the published
+numbers include the work that actually dominates them. d10 is eager
+for a different reason than d4's checkpoint: repeated collect() of
+one built DataFrame reuses materialized shuffle stages, so non-eager
+timing measures only the post-shuffle tail — and WHICH stages are
+still materialized differs across scales (eviction), which made
+d10's first published growth curve flip between LOW and FAIL run to
+run. Rebuilding per timed run recomputes everything.
 
 Usage: python tools/scale_proof.py   (writes docs/SCALE.md, ~20 min)
 """
@@ -48,6 +54,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import EAGER_BUILD
 from hive_to_es_spark.functions.lifecycle import release_all_persistent
 from hive_to_es_spark.io import TABLES, read_table
 from hive_to_es_spark.pipeline import TMP_ROOT
@@ -218,55 +225,6 @@ OPS = {
     "o14_token_budget_mix": (2.0, "per-(source, range) sums + within-range window, all linear in docs; driver state fixed at |sources| x |ranges|"),
 }
 
-# Build-time workers rebuilt inside the timed section (see module doc).
-# d10 is eager for a different reason than d4's checkpoint: repeated
-# collect() of one built DataFrame reuses materialized shuffle stages,
-# so non-eager timing measures only the post-shuffle tail — and WHICH
-# stages are still materialized differs across scales (eviction),
-# which made d10's first published growth curve flip between LOW and
-# FAIL run to run. Rebuilding per timed run recomputes everything.
-EAGER_BUILD = {
-    # x13: not build-eager, but its only heavy stage is one shuffle
-    # join that repeated collect() of a built DataFrame reuses (the
-    # d10 pitfall) — rebuild per timed run to price the whole join
-    "x13_fuzzy_match",
-    "d4_dedup_ngram_jaccard",
-    "d7_dedup_components",
-    "d9_text_dup_groups",
-    "d10_dedup_jaccard_prefix",
-    "d11_dedup_minhash_verified",
-    "d12_dup_groups_hybrid",
-    # p20 runs its sync write at DataFrame-build time (run_job inside
-    # the op); non-eager timing would price only the reconcile read
-    "p20_sync_reconcile",
-    # d16 writes its base index and the accepted-docs delta at build
-    # time; non-eager timing would price only the decision read-back
-    "d16_incremental_neardup",
-    # s16 writes its codebook + inverted lists at build time; non-eager
-    # timing would price only the serving read
-    "s16_ann_ivf_persisted",
-    # e11 writes its (empty) index and the survivors delta at build
-    # time (d16's machinery)
-    "e11_stream_neardup_ingest",
-    # round 10: s17 writes codebook + inverted lists, b10 writes its
-    # CBO-executed result, b11 runs the sink write — all at build time
-    "s17_filtered_ann",
-    "b10_cbo_stats_reorder",
-    "b11_python_datasource_writer",
-    # round 11: s18 builds the base index, appends the delta and
-    # writes the drift report at build time; s19 writes nothing but
-    # its heavy stages are shuffles repeated collect() would reuse
-    # (the d10 pitfall)
-    "s18_ivf_index_maintain",
-    "s19_ivf_hot_cell_split",
-    # d17's assignment + pair join + dominance reduce are all shuffle
-    # stages repeated collect() would reuse (the d10 pitfall)
-    "d17_semantic_dedup",
-    # w20/o14 run their pass-1 offsets collect at build time
-    "w20_peak_concurrency",
-    "o14_token_budget_mix",
-}
-
 # Ops whose OUTPUT is corpus-sized (d13 emits the ENTIRE candidate
 # audit table: 5.4M rows at 8x, 21.7M at 16x — k² by design). Timing
 # collect() on those prices the driver's single-threaded row pickling
@@ -409,7 +367,7 @@ def main() -> int:
         "ops — d13's full audit table — time a noop SINK instead: collect()",
         "would price single-threaded driver pickling of k²-many rows, not",
         "the plan; see SINK_TIMED); eager-build ops",
-        "(d4, d7, d9, d10, d11) rebuild inside the timed section. `b` is",
+        "(bench.EAGER_BUILD) rebuild inside the timed section. `b` is",
         f"the least-squares exponent of t vs k over the op's measured",
         f"rung set; model b = log2(per-doubling factor). Multi-second ops",
         f"(SCALE16_OPS) carry a fifth 16x rung so the asymptote can emerge",
