@@ -71,6 +71,29 @@ def word_shingles(text_col, k: int = 3):
     )
 
 
+def shingle_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows, one per distinct 3-word shingle of each
+    document: the exploded word_shingles relation every shingle-set
+    operator joins on. NULL text yields no rows."""
+    return docs.select(
+        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
+    )
+
+
+def shingle_sql(source: str = "documents") -> str:
+    """DuckDB twin of shingle_rows over the relation `source`: a
+    list_transform over a range, out-of-range indexing -> NULL,
+    concat_ws skips NULLs (word_shingles' partial tail shingle)."""
+    return f"""SELECT doc_id, unnest(list_distinct(
+    list_transform(
+      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
+      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
+                          string_split(lower(text), ' ')[i+1],
+                          string_split(lower(text), ' ')[i+2])
+    ))) AS shingle
+  FROM {source}"""
+
+
 @register("d2_dedup_minhash", None)  # MinHash signatures are engine-specific -> rows-only
 def d2_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH over word 3-shingles.

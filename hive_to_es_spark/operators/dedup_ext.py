@@ -20,7 +20,7 @@ from hive_to_es_spark.io import load_tables, table_row_count
 _LOG = logging.getLogger(__name__)
 _SUBHALF_THRESHOLD_LOGGED = False  # once-per-process log gate (d16/e11)
 from hive_to_es_spark.functions.lifecycle import materialize
-from hive_to_es_spark.operators.dedup import word_shingles
+from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
 from hive_to_es_spark.operators.similarity import _dbl, _dot, _norm
 from hive_to_es_spark.registry import register
 
@@ -116,16 +116,9 @@ def d3_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # out-of-range indexing -> NULL, concat_ws skips NULLs (same as the
 # Spark word_shingles helper). The document-frequency cap (QUALIFY
 # window) mirrors the Spark-side hot-shingle filter exactly.
-_D4_ORACLE = """
+_D4_ORACLE = f"""
 WITH sh0 AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sh AS (
   SELECT doc_id, shingle FROM sh0
@@ -170,9 +163,7 @@ def capped_shingles(
     point inside the builder. Consumers that are done with the result
     free them via functions/lifecycle.py (tools/check.py sweeps after
     every key)."""
-    sh0 = docs.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    sh0 = shingle_rows(docs)
     hot = (
         sh0.groupBy("shingle")
         .agg(F.count("*").alias("_df"))
@@ -306,16 +297,9 @@ def ngram_jaccard_pairs(
 # filter) and d11 (t=0.2, MinHash prefilter): for both, completeness
 # of the Spark side's candidate generation is exactly what the hash
 # compare proves.
-_EXACT_JACCARD_ORACLE = """
+_EXACT_JACCARD_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 common AS (
@@ -328,7 +312,7 @@ SELECT doc_a, doc_b,
 FROM common
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {t}
+WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {{t}}
 """
 _D10_ORACLE = _EXACT_JACCARD_ORACLE.format(t=0.8)
 _D11_ORACLE = _EXACT_JACCARD_ORACLE.format(t=0.2)
@@ -362,7 +346,7 @@ def prefix_jaccard_candidates(docs: DataFrame, threshold: float) -> DataFrame:
     keeps full-shingle blocking for its low-threshold contract
     (measured trade-off documented there).
     """
-    sh = docs.select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle"))
+    sh = shingle_rows(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     return _prefix_candidates(sh, sizes, threshold)
 
@@ -430,9 +414,7 @@ def prefix_filtered_jaccard_pairs(
     `checkpoint_dir` on a cluster) — unmaterialized, the scan +
     explode subtree re-ran ~7x per query (caught by review)."""
     sh = materialize(
-        docs.select(
-            "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-        ),
+        shingle_rows(docs),
         checkpoint_dir,
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -643,9 +625,7 @@ def minhash_verified_jaccard_pairs(
     both verify sides, output sizes) — materialized once, same as
     d4/d10."""
     sh = materialize(
-        docs.select(
-            "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-        ),
+        shingle_rows(docs),
         checkpoint_dir,
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -906,21 +886,11 @@ def d7_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8x1 (threshold ~ (1/b)^(1/r): high-recall candidate generation);
 # estimated Jaccard = matching-component fraction, gated at 0.25.
 _D8_N_HASHES = 8
-_D8_SHINGLE_SQL = """
-SELECT doc_id, unnest(list_distinct(
-  list_transform(
-    range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-    i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                        string_split(lower(text), ' ')[i+1],
-                        string_split(lower(text), ' ')[i+2])
-  ))) AS w
-FROM documents
-"""
 _D8_ORACLE = f"""
-WITH shingles AS ({_D8_SHINGLE_SQL}),
+WITH shingles AS ({shingle_sql()}),
 mh AS (
   SELECT doc_id,
-    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', w)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
+    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
   FROM shingles GROUP BY doc_id
 ),
 bands AS ({' UNION ALL '.join(f"SELECT doc_id, {i} AS band, mh{i} AS mh FROM mh" for i in range(_D8_N_HASHES))}),
@@ -1023,14 +993,7 @@ def d8_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # groups. Keep-min-id per component = the surviving corpus.
 _D9_ORACLE = f"""
 WITH RECURSIVE sh0 AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sh AS (
   SELECT doc_id, shingle FROM sh0
@@ -1090,16 +1053,9 @@ def d9_text_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D12_ORACLE = """
+_D12_ORACLE = f"""
 WITH RECURSIVE sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 common AS (
@@ -1174,10 +1130,10 @@ def d12_dup_groups_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (no est threshold — the low-est tail is exactly where accuracy
 # reporting matters).
 _D13_ORACLE = f"""
-WITH shingles AS ({_D8_SHINGLE_SQL}),
+WITH shingles AS ({shingle_sql()}),
 mh AS (
   SELECT doc_id,
-    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', w)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
+    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
   FROM shingles GROUP BY doc_id
 ),
 bands AS ({' UNION ALL '.join(f"SELECT doc_id, {i} AS band, mh{i} AS mh FROM mh" for i in range(_D8_N_HASHES))}),
@@ -1191,7 +1147,7 @@ inter AS (
   SELECT c.id_a, c.id_b, count(*) AS n_common
   FROM cand c
   JOIN shingles x ON x.doc_id = c.id_a
-  JOIN shingles y ON y.doc_id = c.id_b AND y.w = x.w
+  JOIN shingles y ON y.doc_id = c.id_b AND y.shingle = x.shingle
   GROUP BY c.id_a, c.id_b
 ),
 scored AS (
@@ -1492,16 +1448,9 @@ def d15_subsumed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a dup iff some partner — any already-indexed doc (< 250, INCLUDING
 # its own id: at-least-once redelivery) or an earlier doc of the same
 # batch (< its id) — has exact full-set Jaccard >= 0.2.
-_D16_ORACLE = """
+_D16_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 common AS (
@@ -1593,9 +1542,7 @@ def incremental_neardup(
             _LOG.warning(msg)
             _SUBHALF_THRESHOLD_LOGGED = True
     sh_inc = materialize(
-        incoming.select(
-            "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-        )
+        shingle_rows(incoming)
     )
     bands_inc = minhash_band_rows(sh_inc)
     # Pin the index bytes BEFORE the delta append: the returned frame
@@ -1614,9 +1561,7 @@ def incremental_neardup(
     partner_docs = docs.join(
         cand.select(F.col("p").alias("doc_id")).distinct(), "doc_id", "left_semi"
     )
-    sh_p = partner_docs.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    sh_p = shingle_rows(partner_docs)
     jacc = verified_jaccard_matches(cand, sh_inc, sh_p, threshold)
     m = materialize(jacc.groupBy("d").agg(F.min("p").alias("dup_of")))
     # Index delta: band rows of the ACCEPTED docs only (the survivors a
@@ -1648,9 +1593,7 @@ def d16_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") < 250)
     incoming = docs.filter(F.col("doc_id") >= 200)
     index_path = dataset_tmp_path("d16_minhash_index", sf_dir)
-    sh_base = base.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    sh_base = shingle_rows(base)
     minhash_band_rows(sh_base).write.mode("overwrite").parquet(index_path)
     return incremental_neardup(spark, docs, incoming, index_path)
 

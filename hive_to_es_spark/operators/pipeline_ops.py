@@ -2638,7 +2638,10 @@ def p25_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PLAN: every per-doc gate (url canon + quality + repetition +
 # entropy) is computed in ONE fused corpus scan projection (p10's
 # one-Catalyst-plan discipline — the canon keep-min window is the
-# first exchange); the langid prediction and the decontamination flag
+# first exchange). The features are the single-op definitions, not
+# copies: quality_expr (t4), top_unigram_frac (t11), token_lines
+# (t13/t21's chunker), char_entropy (t24) and shingle_rows /
+# shingle_sql (the shared 3-word shingles of t9/t14/d11); the langid prediction and the decontamination flag
 # join back doc_id-keyed (t3/t9 precedent — co-partitioned corpus
 # joins, the standard shape; the eval shingle set itself is a
 # broadcast). The finished gate frame is materialized ONCE (the o15
@@ -2680,6 +2683,7 @@ _P26_STAGES = (
 
 
 def _p26_oracle() -> str:
+    from hive_to_es_spark.operators.dedup import shingle_sql
     from hive_to_es_spark.operators.scalars import (
         surface_url_sql,
         url_canon_sql,
@@ -2748,14 +2752,7 @@ g5 AS (
   FROM base b LEFT JOIN entr e USING (doc_id)
 ),
 sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM base
+  {shingle_sql("base")}
 ),
 eval_sh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {_P26_EVAL_MOD} = 0),
 decs AS (
@@ -2842,7 +2839,7 @@ def p26_gate_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:
     canon keep-min is a hash-partitioned window on the canonical URL;
     langid predictions and the decontamination flag join back
     doc_id-keyed."""
-    from hive_to_es_spark.operators.dedup import word_shingles
+    from hive_to_es_spark.operators.dedup import shingle_rows
     from hive_to_es_spark.operators.scalars import (
         render_surface_url,
         url_canonicalize,
@@ -2854,33 +2851,20 @@ def p26_gate_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:
         char_entropy,
         langid_predictions,
         quality_expr,
+        token_lines,
+        top_unigram_frac,
     )
 
     variant = F.col("doc_id") % 4
     page = F.expr("doc_id DIV 4")
     curl = url_canonicalize(render_surface_url(variant, page, page % 7))
     quality, _ = quality_expr()
-    toks = F.col("_toks")
-    lt = _T21_LINE_TOKS
-    n_lines = F.expr(f"(size(_toks) + {lt - 1}) DIV {lt}")
-    ls = F.transform(
-        F.sequence(F.lit(1), n_lines.cast("int")),
-        lambda i: F.array_join(F.slice(toks, (i - 1) * lt + 1, lt), " "),
-    )
-    top_cnt = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda w: F.size(F.filter(toks, lambda x: x == w)),
-        )
-    )
     f0 = (
         docs.withColumn("_curl", curl)
         .withColumn("_toks", F.split("text", " "))
-        .withColumn("_ls", ls)
+        .withColumn("_ls", token_lines(_T21_LINE_TOKS))
         .withColumn("_q", quality)
-        .withColumn(
-            "_tf", F.round(top_cnt.cast("double") / F.size(toks), 6)
-        )
+        .withColumn("_tf", top_unigram_frac(F.col("_toks")))
         .withColumn(
             "_dup_ppm",
             F.expr(
@@ -2896,9 +2880,7 @@ def p26_gate_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
     f0 = char_entropy(f0, "text")
     pred = langid_predictions(docs).select("doc_id", "predicted")
-    sh = docs.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    sh = shingle_rows(docs)
     eval_sh = (
         sh.filter(F.col("doc_id") % _P26_EVAL_MOD == 0)
         .select("shingle")

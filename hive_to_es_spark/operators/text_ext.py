@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_to_es_spark.io import load_tables
-from hive_to_es_spark.operators.dedup import word_shingles
+from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql
 from hive_to_es_spark.registry import register
 
 # Fixed stopword list (function words; intersects the fixture's SQL-ish
@@ -136,16 +136,9 @@ def t5_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_T6_ORACLE = """
+_T6_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 )
 SELECT doc_id,
        min(md5(shingle)) AS fingerprint,
@@ -161,7 +154,7 @@ def t6_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     are near-dup candidates; the fingerprint is one 128-bit value per
     document regardless of length — O(1) state to cluster on."""
     d = load_tables(spark, sf_dir).documents
-    sh = d.select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle"))
+    sh = shingle_rows(d)
     return sh.groupBy("doc_id").agg(
         F.min(F.md5("shingle")).alias("fingerprint"),
         F.count("*").alias("n_kgrams"),
@@ -367,16 +360,9 @@ def t8_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_T9_ORACLE = """
+_T9_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 eval_sh AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 = 0),
 corpus_sh AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 <> 0)
@@ -412,9 +398,7 @@ def t9_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand + two-phase agg, not two joins.
     """
     d = load_tables(spark, sf_dir).documents
-    sh = d.select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    sh = shingle_rows(d)
     is_eval = F.col("doc_id") % 29 == 0
     corpus = sh.filter(~is_eval)
     ev = sh.filter(is_eval).select(
@@ -522,6 +506,19 @@ FROM m GROUP BY 1, 2
 """
 
 
+def top_unigram_frac(toks):
+    """Share of the token array `toks` taken by its most frequent
+    token, rounded to 6 dp (t11's feature, one of p26's repetition
+    gates): a transform over the distinct tokens x filter-count."""
+    top_cnt = F.array_max(
+        F.transform(
+            F.array_distinct(toks),
+            lambda w: F.size(F.filter(toks, lambda x: x == w)),
+        )
+    )
+    return F.round(top_cnt.cast("double") / F.size(toks), 6)
+
+
 @register("t11_repetition_filter", _T11_ORACLE)
 def t11_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Intra-document repetition filter: compute each document's
@@ -541,14 +538,7 @@ def t11_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     double, identical in both engines; round(6) before the threshold
     compare keeps the gate stable."""
     d = load_tables(spark, sf_dir).documents
-    toks = F.split("text", " ")
-    top_cnt = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda w: F.size(F.filter(toks, lambda x: x == w)),
-        )
-    )
-    top_frac = F.round(top_cnt.cast("double") / F.size(toks), 6)
+    top_frac = top_unigram_frac(F.split("text", " "))
     verdict = F.when(top_frac > _T11_TOP_FRAC, "drop").otherwise("keep")
     return (
         d.select("lang", top_frac.alias("top_frac"), verdict.alias("verdict"))
@@ -663,6 +653,59 @@ GROUP BY doc_id
 """
 
 
+def token_lines(line_toks: int):
+    """Synthetic "lines": the consecutive `line_toks`-token chunks of
+    the `_toks` column (fixture docs carry no newlines; on real
+    corpora swap in split('\\n')). Callers add `_toks` =
+    split(text, ' ') as a column BEFORE this lambda: Spark does not
+    CSE inside lambda functions, so an inline split() makes every
+    per-line slice re-split the whole text — O(n_lines * n_tokens)
+    per document (the t22 lesson; word_shingles' arrays_zip note is
+    the same finding)."""
+    toks = F.col("_toks")
+    n_lines = F.expr(f"(size(_toks) + {line_toks - 1}) DIV {line_toks}")
+    return F.transform(
+        F.sequence(F.lit(1), n_lines.cast("int")),
+        lambda i: F.array_join(
+            F.slice(toks, (i - 1) * line_toks + 1, line_toks), " "
+        ),
+    )
+
+
+def _numbered_lines(
+    docs: DataFrame, line_toks: int, no_col: str, line_col: str
+) -> DataFrame:
+    """(doc_id, no_col, line_col) rows: each document's token_lines,
+    numbered from 1."""
+    return (
+        docs.withColumn("_toks", F.split(F.col("text"), " "))
+        .select("doc_id", F.posexplode(token_lines(line_toks)).alias("pos", line_col))
+        .select("doc_id", (F.col("pos") + 1).alias(no_col), line_col)
+    )
+
+
+def _reassemble(
+    rows: DataFrame, n_col: str, dropped, kept, no_col: str, line_col: str
+) -> DataFrame:
+    """Numbered lines back to one row per document: doc_id, n_col
+    (lines in), n_dropped and cleaned_text, the kept lines rejoined
+    in order. collect_list(when(kept, ...)) drops the nulls of removed
+    lines; array_sort on (no_col, line_col) structs restores document
+    order deterministically."""
+    kept_struct = F.when(kept, F.struct(F.col(no_col), F.col(line_col)))
+    return rows.groupBy("doc_id").agg(
+        F.count("*").cast("bigint").alias(n_col),
+        F.sum(F.when(dropped, 1).otherwise(0)).cast("bigint").alias("n_dropped"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(kept_struct)),
+                lambda s: s[line_col],
+            ),
+            " ",
+        ).alias("cleaned_text"),
+    )
+
+
 def line_dedup(docs: DataFrame, line_toks: int = _T13_LINE_TOKS,
                df_min: int = _T13_DF_MIN) -> DataFrame:
     """t13's census → broadcast-membership → reassembly plan as a
@@ -671,24 +714,7 @@ def line_dedup(docs: DataFrame, line_toks: int = _T13_LINE_TOKS,
     the hypothesis property test drives the SHIPPED plan rather than
     an inline copy that could drift (round-7 advice). Output columns:
     doc_id, n_lines, n_dropped, cleaned_text."""
-    # Tokens materialize as a column BEFORE the chunking lambda: Spark
-    # does not CSE inside lambda functions, so an inline split() makes
-    # every per-line slice re-split the whole text — O(n_lines *
-    # n_tokens) per document (the t22 lesson; word_shingles' arrays_zip
-    # note is the same finding).
-    toks = F.col("_toks")
-    n_lines = F.expr(f"(size(_toks) + {line_toks - 1}) DIV {line_toks}")
-    lines_arr = F.transform(
-        F.sequence(F.lit(1), n_lines.cast("int")),
-        lambda i: F.array_join(
-            F.slice(toks, (i - 1) * line_toks + 1, line_toks), " "
-        ),
-    )
-    lines = (
-        docs.withColumn("_toks", F.split(F.col("text"), " "))
-        .select("doc_id", F.posexplode(lines_arr).alias("pos", "line"))
-        .select("doc_id", (F.col("pos") + 1).alias("line_no"), "line")
-    )
+    lines = _numbered_lines(docs, line_toks, "line_no", "line")
     boiler = (
         lines.groupBy("line")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -698,22 +724,8 @@ def line_dedup(docs: DataFrame, line_toks: int = _T13_LINE_TOKS,
     flagged = lines.join(F.broadcast(boiler), "line", "left").withColumn(
         "dropped", F.coalesce(F.col("is_boiler"), F.lit(False))
     )
-    kept_struct = F.when(
-        ~F.col("dropped"), F.struct(F.col("line_no"), F.col("line"))
-    )
-    return flagged.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_lines"),
-        F.sum(F.when(F.col("dropped"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dropped"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s["line"],
-            ),
-            " ",
-        ).alias("cleaned_text"),
-    )
+    dropped = F.col("dropped")
+    return _reassemble(flagged, "n_lines", dropped, ~dropped, "line_no", "line")
 
 
 @register("t13_line_dedup", _T13_ORACLE)
@@ -832,19 +844,7 @@ def paragraph_dedup(
     profiled pass None and get the window plan). Above
     _D20_SKEW_MAX_DF the survivor pick switches to the skew-safe
     census+join arm — see the gate block comment."""
-    toks = F.col("_toks")
-    nl = F.expr(f"(size(_toks) + {line_toks - 1}) DIV {line_toks}")
-    paras_arr = F.transform(
-        F.sequence(F.lit(1), nl.cast("int")),
-        lambda i: F.array_join(
-            F.slice(toks, (i - 1) * line_toks + 1, line_toks), " "
-        ),
-    )
-    paras = (
-        docs.withColumn("_toks", F.split(F.col("text"), " "))
-        .select("doc_id", F.posexplode(paras_arr).alias("pos", "para"))
-        .select("doc_id", (F.col("pos") + 1).alias("para_no"), "para")
-    )
+    paras = _numbered_lines(docs, line_toks, "para_no", "para")
     if max_para_df is not None and max_para_df > _D20_SKEW_MAX_DF:
         minima = paras.groupBy("para").agg(
             F.min(F.struct("doc_id", "para_no")).alias("_m")
@@ -864,21 +864,8 @@ def paragraph_dedup(
     else:
         w = Window.partitionBy("para").orderBy("doc_id", "para_no")
         ranked = paras.withColumn("rn", F.row_number().over(w))
-    kept_struct = F.when(
-        F.col("rn") == 1, F.struct(F.col("para_no"), F.col("para"))
-    )
-    return ranked.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_paras"),
-        F.sum(F.when(F.col("rn") > 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_dropped"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s["para"],
-            ),
-            " ",
-        ).alias("cleaned_text"),
+    return _reassemble(
+        ranked, "n_paras", F.col("rn") > 1, F.col("rn") == 1, "para_no", "para"
     )
 
 
@@ -895,16 +882,9 @@ def d20_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # t14 — graded contamination: t9's boolean gate -> per-doc overlap
 # fraction + release action, over ALL corpus docs (0-hit docs too).
-_T14_ORACLE = """
+_T14_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 eval_set AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 29 = 0),
 scored AS (
@@ -942,13 +922,10 @@ def t14_contamination_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     small and broadcast, the corpus side LEFT-joins it map-side (a
     hit is a build-side probe, a miss costs nothing), and the only
     shuffle is the per-doc count pair, map-side combined on doc_id.
-    array_distinct runs scan-side so duplicate shingles inside one
-    doc never inflate the join."""
+    Shingles are per-doc distinct at the scan (word_shingles), so
+    duplicate shingles inside one doc never inflate the join."""
     d = load_tables(spark, sf_dir).documents
-    sh = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(word_shingles(F.col("text")))).alias("shingle"),
-    )
+    sh = shingle_rows(d)
     is_eval = F.col("doc_id") % 29 == 0
     eval_set = sh.filter(is_eval).select("shingle").distinct().withColumn(
         "hit", F.lit(1)
@@ -2006,15 +1983,7 @@ def repetition_rules(docs: DataFrame, line_toks: int = _T21_LINE_TOKS) -> DataFr
     """t21's render -> measure -> gate as a DataFrame-in/out helper
     (docs must carry doc_id + non-null text). One projection of array
     HOFs per row; see the block comment for the decoration rule."""
-    # _toks materializes before the chunking lambda — inline split()
-    # would re-split per line inside the transform (no CSE in lambdas;
-    # the t13/t22 lesson).
-    w = F.col("_toks")
-    n_lines0 = F.expr(f"(size(_toks) + {line_toks - 1}) DIV {line_toks}")
-    ls = F.transform(
-        F.sequence(F.lit(1), n_lines0.cast("int")),
-        lambda i: F.array_join(F.slice(w, (i - 1) * line_toks + 1, line_toks), " "),
-    )
+    ls = token_lines(line_toks)
     d5 = F.col("doc_id") % 5 == 0
     d7 = F.col("doc_id") % 7 == 0
     d11 = F.col("doc_id") % 11 == 0

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from hive_to_es_spark.functions.money import cents, sum_cents
 from hive_to_es_spark.io import load_tables
+from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
 from hive_to_es_spark.registry import register
 
 
@@ -714,7 +715,6 @@ def foreach_batch_neardup_ingest(state_root: str, threshold: float = 0.2):
     with the batch path (band_candidates / verified_jaccard_matches),
     so the streaming fold cannot drift from its convergence target."""
     from hive_to_es_spark.functions.merge import fs_exists
-    from hive_to_es_spark.operators.dedup import word_shingles
     from hive_to_es_spark.operators.dedup_ext import (
         band_candidates,
         minhash_band_rows,
@@ -724,11 +724,6 @@ def foreach_batch_neardup_ingest(state_root: str, threshold: float = 0.2):
     index_path = f"{state_root}/index"
     docs_path = f"{state_root}/docs"
     surv_path = f"{state_root}/survivors"
-
-    def _shingles(df: DataFrame) -> DataFrame:
-        return df.select(
-            "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-        )
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -745,7 +740,7 @@ def foreach_batch_neardup_ingest(state_root: str, threshold: float = 0.2):
         batch = batch.localCheckpoint(eager=True)
         if batch.isEmpty():
             return
-        sh_b = _shingles(batch).localCheckpoint(eager=True)
+        sh_b = shingle_rows(batch).localCheckpoint(eager=True)
         bands_b = minhash_band_rows(sh_b).localCheckpoint(eager=True)
         cand = band_candidates(bands_b, bands_b, require_smaller=True)
         if have_state:
@@ -760,7 +755,7 @@ def foreach_batch_neardup_ingest(state_root: str, threshold: float = 0.2):
             else batch
         ).join(cand.select(F.col("p").alias("doc_id")).distinct(), "doc_id", "left_semi")
         dup_ids = (
-            verified_jaccard_matches(cand, sh_b, _shingles(partner_docs), threshold)
+            verified_jaccard_matches(cand, sh_b, shingle_rows(partner_docs), threshold)
             .select(F.col("d").alias("doc_id"))
             .distinct()
         )
@@ -778,16 +773,9 @@ def foreach_batch_neardup_ingest(state_root: str, threshold: float = 0.2):
 # has exact full-set Jaccard >= 0.2 with it — the id-ordered fold of
 # the near-dup ladder (d16 with an empty base index over the whole
 # corpus). Pure pair semantics, so the oracle is one statement.
-_E11_ORACLE = """
+_E11_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 common AS (
@@ -820,7 +808,6 @@ def e11_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges to under in-order, at-least-once delivery
     (tests/test_streaming.py replays micro-batched files with a
     redelivery and asserts survivor equality)."""
-    from hive_to_es_spark.operators.dedup import word_shingles
     from hive_to_es_spark.operators.dedup_ext import (
         incremental_neardup,
         minhash_band_rows,
@@ -829,9 +816,7 @@ def e11_stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_tables(spark, sf_dir).documents
     index_path = dataset_tmp_path("e11_empty_index", sf_dir)
-    empty = docs.filter(F.col("doc_id") < 0).select(
-        "doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle")
-    )
+    empty = shingle_rows(docs.filter(F.col("doc_id") < 0))
     minhash_band_rows(empty).write.mode("overwrite").parquet(index_path)
     return incremental_neardup(spark, docs, docs, index_path)
 
@@ -935,16 +920,9 @@ def e12_stream_session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream==batch in tests/test_streaming.py.
 # ---------------------------------------------------------------------------
 
-_E13_ORACLE = """
+_E13_ORACLE = f"""
 WITH sh AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(lower(text), ' ')[i],
-                          string_split(lower(text), ' ')[i+1],
-                          string_split(lower(text), ' ')[i+2])
-    ))) AS shingle
-  FROM documents
+  {shingle_sql()}
 ),
 eval_set AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 29 = 0),
 hits AS (
@@ -966,7 +944,6 @@ def e13_eval_shingles(docs: DataFrame) -> DataFrame:
     shingles, one per row (doc_id % 29 = 0, t9's eval split). Computed
     once per deployment from the benchmark file, then broadcast as a
     hash table into every batch/micro-batch."""
-    from hive_to_es_spark.operators.dedup import word_shingles
 
     return (
         docs.filter(F.col("doc_id") % 29 == 0)
@@ -984,7 +961,6 @@ def tf_decontaminate_counts(docs: DataFrame, eval_shingles: DataFrame) -> DataFr
     in the output as (0, 'pass') — matching the oracle's LEFT JOIN
     over the documents table (round-11 ADVICE: the old per-row
     array_intersect returned NULL hits on NULL text)."""
-    from hive_to_es_spark.operators.dedup import word_shingles
 
     sh = docs.select(
         "doc_id", F.explode_outer(word_shingles(F.col("text"))).alias("shingle")
