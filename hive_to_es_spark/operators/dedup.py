@@ -83,7 +83,9 @@ def shingle_rows(docs: DataFrame) -> DataFrame:
 def shingle_sql(source: str = "documents") -> str:
     """DuckDB twin of shingle_rows over the relation `source`: a
     list_transform over a range, out-of-range indexing -> NULL,
-    concat_ws skips NULLs (word_shingles' partial tail shingle)."""
+    concat_ws skips NULLs (word_shingles' partial tail shingle).
+    NULL text is filtered: greatest(NULL, 1) is 1 in DuckDB, so it
+    would otherwise yield one '' shingle where Spark yields none."""
     return f"""SELECT doc_id, unnest(list_distinct(
     list_transform(
       range(1, greatest(len(string_split(lower(text), ' ')) - 2, 1) + 1),
@@ -91,7 +93,8 @@ def shingle_sql(source: str = "documents") -> str:
                           string_split(lower(text), ' ')[i+1],
                           string_split(lower(text), ' ')[i+2])
     ))) AS shingle
-  FROM {source}"""
+  FROM {source}
+  WHERE text IS NOT NULL"""
 
 
 @register("d2_dedup_minhash", None)  # MinHash signatures are engine-specific -> rows-only

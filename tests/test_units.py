@@ -138,6 +138,25 @@ def test_minhash_shingles_nonempty_for_short_text(spark):
     assert [r.sh for r in out] == [["ab"], ["a b c", "b c d"]]
 
 
+def test_shingle_rows_match_shingle_sql(spark):
+    """The Spark shingle relation and its DuckDB twin agree on the
+    corners the fixtures lack: NULL and empty text, fewer than 3
+    words, repeats, doubled/edge spaces and non-ASCII case."""
+    import duckdb
+
+    from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql
+
+    texts = [None, "", "a", "a b", "A b A b A b", "a  b c", " a b ", "Ärger ÜBER über"]
+    rows = list(enumerate(texts))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.execute(shingle_sql()).fetchall())
+    docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
+    got = sorted(map(tuple, shingle_rows(docs).collect()))
+    assert got == want
+
+
 def test_range_frame_includes_peers(spark):
     from pyspark.sql import Window
 
@@ -492,7 +511,7 @@ def test_prefix_filter_prunes_and_stays_complete(spark, sf_dir):
     filter, checked against an independent Spark plan on top of the
     DuckDB oracle gate."""
     from hive_to_es_spark.io import load_tables
-    from hive_to_es_spark.operators.dedup import word_shingles
+    from hive_to_es_spark.operators.dedup import shingle_rows
     from hive_to_es_spark.operators.dedup_ext import (
         ngram_jaccard_pairs,
         prefix_filtered_jaccard_pairs,
@@ -501,7 +520,7 @@ def test_prefix_filter_prunes_and_stays_complete(spark, sf_dir):
     from pyspark.sql import functions as F
 
     docs = load_tables(spark, sf_dir).documents
-    sh = docs.select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle"))
+    sh = shingle_rows(docs)
     full_block = (
         sh.alias("a")
         .join(sh.alias("b"), "shingle")
@@ -528,7 +547,7 @@ def test_minhash_prefilter_cuts_candidate_stream(spark, sf_dir):
     cap-free exact plan's — the recall claim, checked against an
     independent Spark plan on top of the DuckDB oracle gate."""
     from hive_to_es_spark.io import load_tables
-    from hive_to_es_spark.operators.dedup import word_shingles
+    from hive_to_es_spark.operators.dedup import shingle_rows
     from hive_to_es_spark.operators.dedup_ext import (
         minhash_candidate_pairs,
         minhash_verified_jaccard_pairs,
@@ -537,7 +556,7 @@ def test_minhash_prefilter_cuts_candidate_stream(spark, sf_dir):
     from pyspark.sql import functions as F
 
     docs = load_tables(spark, sf_dir).documents
-    sh = docs.select("doc_id", F.explode(word_shingles(F.col("text"))).alias("shingle"))
+    sh = shingle_rows(docs)
     full_block = (
         sh.alias("a")
         .join(sh.alias("b"), "shingle")
