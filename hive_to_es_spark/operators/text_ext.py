@@ -809,61 +809,15 @@ GROUP BY doc_id
 """
 
 
-# Profiled skew gate for d20 (round 14, VERDICT r13 task 6): the
-# survivor-pick window partitions by paragraph hash, so the heaviest
-# partition is the max document-frequency of any paragraph. Measured
-# on the replicated-fixture rungs (tools/scale DF census): max-df =
-# 92 / 368 / 1472 at sf0.1 / 4x / 16x — exactly linear in corpus
-# replication, ~0.1% of total paragraph mass. A window partition
-# cannot be split by AQE, so once max_df x ~64 B/row exceeds a task's
-# fair share (0.1% of mass ≈ one task's share at 1000-way
-# parallelism — the open-web empty-line/boilerplate case), the
-# keep-first pick must leave the window. The skew-safe arm below
-# replaces it with a map-combined struct-min census (the hot key
-# collapses to ONE row per map task before the shuffle) + an
-# equi-join back whose probe-side skew IS AQE-splittable
-# (OptimizeSkewedJoin applies to shuffle joins, never to windows).
-# Identical keep-first semantics: min(struct(doc_id, para_no)) is
-# the row_number-1 row under the same (doc_id, para_no) order —
-# pinned equivalent on the fixtures in tests/test_units.py.
-_D20_SKEW_MAX_DF = 100_000
-
-
-def paragraph_dedup(
-    docs: DataFrame,
-    line_toks: int = _T13_LINE_TOKS,
-    max_para_df: int | None = None,
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, line_toks: int = _T13_LINE_TOKS) -> DataFrame:
     """d20's chunk -> global keep-first -> reassembly plan as a
     DataFrame-in/out helper (docs must carry doc_id + text); chunker
-    and reassembly are t13's (line_dedup) so the two contracts cannot
-    drift. Output columns: doc_id, n_paras, n_dropped, cleaned_text.
-
-    `max_para_df` is the PROFILED hottest-paragraph document
-    frequency (one p18-class census pass; callers who have not
-    profiled pass None and get the window plan). Above
-    _D20_SKEW_MAX_DF the survivor pick switches to the skew-safe
-    census+join arm — see the gate block comment."""
+    and reassembly are t13's (_numbered_lines, _reassemble) so the two
+    contracts cannot drift. Output columns: doc_id, n_paras,
+    n_dropped, cleaned_text."""
     paras = _numbered_lines(docs, line_toks, "para_no", "para")
-    if max_para_df is not None and max_para_df > _D20_SKEW_MAX_DF:
-        minima = paras.groupBy("para").agg(
-            F.min(F.struct("doc_id", "para_no")).alias("_m")
-        )
-        ranked = (
-            paras.join(minima, "para")
-            .withColumn(
-                "rn",
-                F.when(
-                    (F.col("doc_id") == F.col("_m.doc_id"))
-                    & (F.col("para_no") == F.col("_m.para_no")),
-                    1,
-                ).otherwise(2),
-            )
-            .drop("_m")
-        )
-    else:
-        w = Window.partitionBy("para").orderBy("doc_id", "para_no")
-        ranked = paras.withColumn("rn", F.row_number().over(w))
+    w = Window.partitionBy("para").orderBy("doc_id", "para_no")
+    ranked = paras.withColumn("rn", F.row_number().over(w))
     return _reassemble(
         ranked, "n_paras", F.col("rn") > 1, F.col("rn") == 1, "para_no", "para"
     )

@@ -1331,30 +1331,3 @@ def test_t25_vocab_broadcasts_topk_census(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_d20_skew_arm_census_join_no_window(spark, sf_dir):
-    """Both arms of d20's profiled skew gate, plan-pinned (the d18
-    two-arm precedent). Default arm: para-partitioned window, no join
-    (pinned in test_d20_window_keyed_on_para_no_join). Skew arm: NO
-    window anywhere — the survivor pick is a map-combined struct-min
-    aggregate (partial_min visible under the exchange, i.e. the hot
-    key collapses map-side) plus an AQE-splittable para equi-join."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from hive_to_es_spark.io import load_tables
-    from hive_to_es_spark.operators.text_ext import paragraph_dedup
-
-    d = load_tables(spark, sf_dir).documents
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        paragraph_dedup(d, max_para_df=10**9).explain()
-    plan = buf.getvalue()
-    assert "Window" not in plan, plan
-    assert "partial_min" in plan, plan
-    # join strategy is size-driven: on the tiny fixtures Catalyst
-    # broadcasts the census; at scale the same plan shuffles and the
-    # probe-side hot key is AQE-split. The pin is that a JOIN (any
-    # strategy) replaced the window, never a cartesian.
-    assert "Join" in plan, plan
-    assert "CartesianProduct" not in plan, plan

@@ -3506,27 +3506,6 @@ def test_p26_accounting_telescopes_and_stages_fire(spark, sf_dir):
     assert rows[-1].n_out > 0, rows[-1]
 
 
-def test_d20_skew_arm_equals_window_arm(spark, sf_dir):
-    """The profiled skew gate's census+join arm must be
-    output-identical to the default window arm (same keep-first
-    contract: min(struct(doc_id, para_no)) IS the row_number-1 row
-    under the same order) — both arms run on the fixtures and every
-    (doc_id, n_paras, n_dropped, cleaned_text) row must match."""
-    from hive_to_es_spark.io import load_tables
-    from hive_to_es_spark.operators.text_ext import paragraph_dedup
-
-    d = load_tables(spark, sf_dir).documents
-    base = sorted(
-        (r.doc_id, r.n_paras, r.n_dropped, r.cleaned_text)
-        for r in paragraph_dedup(d).collect()
-    )
-    skew = sorted(
-        (r.doc_id, r.n_paras, r.n_dropped, r.cleaned_text)
-        for r in paragraph_dedup(d, max_para_df=10**9).collect()
-    )
-    assert base == skew
-
-
 def test_langid_multisplit_parity(spark, sf_dir):
     """langid_predictions on a multi-split input returns exactly the
     rows of the single-split run. Every fixture scans as one split, so
