@@ -383,7 +383,10 @@ def main() -> int:
     # outgrew the window (r11 verdict task 8). The stdout line now
     # carries the 7 flagships + roll-ups only; the FULL per-query
     # detail (extension set included) is written to
-    # BENCH_latest_full.json next to this script every run.
+    # BENCH_latest_full.json next to this script every run. `cpus`
+    # (the session's default parallelism) makes a snapshot taken on
+    # another host self-describing.
+    cpus = spark.sparkContext.defaultParallelism
     full = {
         "metric": "flagship_total_sec",
         "value": flagship_total,
@@ -391,6 +394,7 @@ def main() -> int:
         "queries": per_query,
         "extended_total_sec": round(sum(per_query[n] for n in EXTENSION), 4),
         "sf": sf,
+        "cpus": cpus,
     }
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_latest_full.json"),
@@ -410,6 +414,7 @@ def main() -> int:
                 ),
                 "full_detail": "BENCH_latest_full.json",
                 "sf": sf,
+                "cpus": cpus,
                 "notes": "sub-100ms ops vary up to ~2.5x with JVM warmth across "
                 "session layouts; same-layout +-20%; "
                 "multi-sec ops vary ~+-25% across days (w8 A/B round 7; "

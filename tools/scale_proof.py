@@ -363,7 +363,8 @@ def main() -> int:
         f"Generated by tools/scale_proof.py at {SF_DIR} vs synthetically",
         f"scaled copies at k={scale_list} (see the tool's docstring for the",
         "scaling strategy and why each expectation holds). Times are",
-        "best-of-2 collect() after a warm-up, local[32] (corpus-sized-OUTPUT",
+        f"best-of-2 collect() after a warm-up, {spark.sparkContext.master}"
+        " (corpus-sized-OUTPUT",
         "ops — d13's full audit table — time a noop SINK instead: collect()",
         "would price single-threaded driver pickling of k²-many rows, not",
         "the plan; see SINK_TIMED); eager-build ops",

@@ -48,7 +48,8 @@ def main() -> int:
         "# TPC-H — all 22 query shapes, measured",
         "",
         f"Per-query best-of-3 collect() after warm-up at {SF_DIR},",
-        "local[32] (BASELINE.md method). Shapes are fixture-adapted where",
+        f"{spark.sparkContext.master} (BASELINE.md method). Shapes are"
+        " fixture-adapted where",
         "official columns are absent (operators/tpch_ext.py documents each",
         "adaptation); all 22 hash-verify vs DuckDB (tools/check.py).",
         "",
