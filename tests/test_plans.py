@@ -72,6 +72,22 @@ def _plan(spark, sf_dir, key):
     return buf.getvalue()
 
 
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """key -> formatted plan, or the exception building or explaining
+    it raised, for every registered op outside SKIP: built once and
+    shared by the two registry-wide sweeps."""
+    plans = {}
+    for key in queries():
+        if key in SKIP:
+            continue
+        try:
+            plans[key] = _plan(spark, sf_dir, key)
+        except Exception as ex:  # plan construction must never fail either
+            plans[key] = ex
+    return plans
+
+
 def test_filters_push_into_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "f1_pred_basic")
     assert "GreaterThanOrEqual(l_quantity,45.0)" in plan
@@ -102,20 +118,17 @@ def test_topk_plans_take_ordered(spark, sf_dir):
         assert "TakeOrderedAndProject" in _plan(spark, sf_dir, key), key
 
 
-def test_no_unbounded_cartesian_anywhere(spark, sf_dir):
+def test_no_unbounded_cartesian_anywhere(registry_plans):
     """Sweep EVERY registered operator's physical plan: a
     CartesianProduct outside the explicit allowlist is a 100 TB
     scale-killer and fails this test."""
     offenders = []
-    for key in queries():
-        if key in CARTESIAN_OK | SKIP:
+    for key, plan in registry_plans.items():
+        if key in CARTESIAN_OK:
             continue
-        try:
-            plan = _plan(spark, sf_dir, key)
-        except Exception as ex:  # plan construction must never fail either
-            offenders.append((key, f"explain raised: {ex}"))
-            continue
-        if "CartesianProduct" in plan:
+        if isinstance(plan, Exception):
+            offenders.append((key, f"explain raised: {plan}"))
+        elif "CartesianProduct" in plan:
             offenders.append((key, "CartesianProduct"))
     assert not offenders, offenders
 
@@ -162,18 +175,16 @@ def test_salted_join_plan_actually_shuffles(spark, sf_dir):
     assert "__salt" in plan  # the salt participates in the join keys
 
 
-def test_no_unpartitioned_window_anywhere(spark, sf_dir):
+def test_no_unpartitioned_window_anywhere(registry_plans):
     """Sweep EVERY registered operator's physical plan for a window
     with an empty partition spec — the 'Moving all data to a single
     partition' plan is banned repo-wide."""
     offenders = []
-    for key in queries():
-        if key in SKIP | UNPARTITIONED_WINDOW_OK:
+    for key, plan in registry_plans.items():
+        if key in UNPARTITIONED_WINDOW_OK:
             continue
-        try:
-            plan = _plan(spark, sf_dir, key)
-        except Exception as ex:
-            offenders.append((key, f"explain raised: {ex}"))
+        if isinstance(plan, Exception):
+            offenders.append((key, f"explain raised: {plan}"))
             continue
         bad = _unpartitioned_window_lines(plan)
         if bad:
