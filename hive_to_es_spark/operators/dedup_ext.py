@@ -112,10 +112,8 @@ def d3_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_signatures(d).orderBy("doc_id")
 
 
-# Shingle construction mirrored in DuckDB: list_transform over a range,
-# out-of-range indexing -> NULL, concat_ws skips NULLs (same as the
-# Spark word_shingles helper). The document-frequency cap (QUALIFY
-# window) mirrors the Spark-side hot-shingle filter exactly.
+# The document-frequency cap (QUALIFY window) mirrors the Spark-side
+# hot-shingle filter exactly.
 _D4_ORACLE = f"""
 WITH sh0 AS (
   {shingle_sql()}
@@ -413,10 +411,7 @@ def prefix_filtered_jaccard_pairs(
     localCheckpoint by default, reliable checkpoint via
     `checkpoint_dir` on a cluster) — unmaterialized, the scan +
     explode subtree re-ran ~7x per query (caught by review)."""
-    sh = materialize(
-        shingle_rows(docs),
-        checkpoint_dir,
-    )
+    sh = materialize(shingle_rows(docs), checkpoint_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     cand = _prefix_candidates(sh, sizes, threshold)
     sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -624,10 +619,7 @@ def minhash_verified_jaccard_pairs(
     The exploded shingle relation feeds FOUR consumers (signature agg,
     both verify sides, output sizes) — materialized once, same as
     d4/d10."""
-    sh = materialize(
-        shingle_rows(docs),
-        checkpoint_dir,
-    )
+    sh = materialize(shingle_rows(docs), checkpoint_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     cand = minhash_candidate_pairs(sh, n_hashes)
     sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -1541,9 +1533,7 @@ def incremental_neardup(
             warnings.warn(msg, UserWarning, stacklevel=2)
             _LOG.warning(msg)
             _SUBHALF_THRESHOLD_LOGGED = True
-    sh_inc = materialize(
-        shingle_rows(incoming)
-    )
+    sh_inc = materialize(shingle_rows(incoming))
     bands_inc = minhash_band_rows(sh_inc)
     # Pin the index bytes BEFORE the delta append: the returned frame
     # must reflect the index as of batch start, not re-read the path

@@ -2641,8 +2641,8 @@ def p25_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # first exchange). The features are the single-op definitions, not
 # copies: quality_expr (t4), top_unigram_frac (t11), token_lines
 # (t13/t21's chunker), char_entropy (t24) and shingle_rows /
-# shingle_sql (the shared 3-word shingles of t9/t14/d11); the langid prediction and the decontamination flag
-# join back doc_id-keyed (t3/t9 precedent — co-partitioned corpus
+# shingle_sql (the shared 3-word shingles of t9/t14/d11). The langid
+# prediction and the decontamination flag join back doc_id-keyed (t3/t9 precedent — co-partitioned corpus
 # joins, the standard shape; the eval shingle set itself is a
 # broadcast). The finished gate frame is materialized ONCE (the o15
 # checkpoint discipline — it feeds the near-dup miner, the survivor

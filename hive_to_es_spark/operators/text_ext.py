@@ -745,10 +745,7 @@ def t13_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction (on open-web corpora cap the census with a df
     ceiling or count-min, as d4 does for shingles), so the corpus
     itself never shuffles for the membership test. The only
-    data-sized shuffle is the final reassembly groupBy(doc_id).
-    collect_list(when(keep, ...)) drops the nulls of removed lines;
-    array_sort on (line_no, line) structs restores document order
-    deterministically."""
+    data-sized shuffle is the final reassembly groupBy(doc_id)."""
     return line_dedup(load_tables(spark, sf_dir).documents)
 
 
