@@ -11,8 +11,19 @@ verified against a real HTTP round-trip in tests/test_es_sink.py.
 
 Scale posture: the driver issues only O(1) index-lifecycle calls
 (DELETE / PUT / _refresh); every document flows executor-side through
-``foreachPartition``, one POST per ``batch_entries`` chunk, so sink
-throughput scales with executors exactly like the connector's.
+``foreachPartition``, one POST per ``batch_entries`` chunk per task.
+A source with fewer splits than the session's ``defaultParallelism``
+is hash-repartitioned to ``defaultParallelism`` tasks on the id column
+(round-robin when there is none), so encoding and POSTs use every core
+even when the input is one file; all rows of one ``_id`` then meet in
+one task, which POSTs its chunks in order, so last-writer order per
+``_id`` holds. A source with at least ``defaultParallelism`` splits
+keeps its own partitioning and no shuffle is added; so does a plan
+that ends in a shuffle, whose task count AQE sizes from the data.
+The rows sent are counted by an accumulator inside the tasks (applied
+once per successful task) and returned, so the caller's row count is
+the written count, not a second execution of the source.
+
 Transient back-pressure (HTTP 429 bulk-queue rejection, 503) retries
 the same chunk in place with exponential backoff (the es-hadoop
 ``es.batch.write.retry.count``/``.wait`` analogue); a permanent
@@ -21,7 +32,10 @@ retry then gives at-least-once delivery, which the ``_id`` mapping
 upgrades to effectively-once (same ``_id`` re-index = replace — the
 es-hadoop "upsert" analogue): re-delivered chunks overwrite their own
 documents, proven by tests/test_es_sink.py's mid-stream-failure
-replay. Rows never touch the driver.
+replay. When one task fails the job, ``bulk_index`` waits until Spark
+has ended every sibling task of that job before it re-raises, so no
+chunk of the failed run can land after the caller sees the failure
+(and, say, retries with a DELETE + PUT). Rows never touch the driver.
 """
 
 from __future__ import annotations
@@ -30,6 +44,7 @@ import base64
 import datetime
 import decimal
 import json
+import time
 
 from pyspark.sql import DataFrame
 
@@ -171,6 +186,28 @@ def _post_bulk(
         raise RuntimeError(f"bulk indexing reported errors: first={first}")
 
 
+def _await_job_tasks(sc, group: str | None, known: set[int]) -> None:
+    """Block until every task of the jobs started in job group `group`
+    since `known` was listed has ended. Spark raises a failed job to
+    the caller while it is still cancelling the job's other tasks, and
+    a cancelled Python task keeps running (and POSTing) until its
+    worker finishes or is killed (spark.python.task.killTimeout)."""
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in set(tracker.getJobIdsForGroup(group)) - known]
+    # The status store learns of a job's end only after every event
+    # before it (task starts, stage completion): wait for that first,
+    # so no stage's active-task count is read before its tasks are.
+    while any(j is not None and j.status == "RUNNING" for j in jobs):
+        time.sleep(0.05)
+        jobs = [tracker.getJobInfo(j.jobId) for j in jobs if j is not None]
+    stages = {s for j in jobs if j is not None for s in j.stageIds}
+    while any(
+        (info := tracker.getStageInfo(s)) is not None and info.numActiveTasks > 0
+        for s in stages
+    ):
+        time.sleep(0.05)
+
+
 def bulk_index(
     df: DataFrame,
     es_url: str,
@@ -182,9 +219,10 @@ def bulk_index(
     timeout: float = 30.0,
     max_retries: int = 4,
     retry_backoff_s: float = 0.5,
-) -> None:
+) -> int:
     """Bulk-index `df` into `index` at `es_url` (scheme-qualified,
-    e.g. ``http://localhost:9200``).
+    e.g. ``http://localhost:9200``); returns the number of documents
+    sent.
 
     mode="overwrite" is the reference's FULL sync: delete the index
     (404 on first run is fine) and recreate it, then load; "append"
@@ -210,16 +248,33 @@ def bulk_index(
         _http("DELETE", f"{es_url}/{index}", ignore=(404,), timeout=timeout)
         _http("PUT", f"{es_url}/{index}", body=b"{}", timeout=timeout)
 
+    sc = df.sparkSession.sparkContext
+    width = sc.defaultParallelism
+    # An adaptive plan (one that ends in a shuffle) keeps its plan:
+    # AQE sizes its tasks from the data, and its split count is only
+    # known after its upstream stages ran — which a repartition on top
+    # would then run a second time.
+    plan = df._jdf.queryExecution().executedPlan()
+    adaptive = plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    rdd = df.rdd
+    if not adaptive and rdd.getNumPartitions() < width:
+        # A narrow source (one file is one split) would encode and
+        # POST every document from a few tasks. Hashing on the id keeps
+        # each _id's rows in one task, in their source order.
+        cols = [id_column] if id_column in df.columns else []
+        rdd = df.repartition(width, *cols).rdd
+
     url, idx, idc = es_url, index, id_column
     n, to = int(batch_entries), float(timeout)
     retries, backoff = int(max_retries), float(retry_backoff_s)
+    sent = sc.accumulator(0)
 
     def send_partition(rows) -> None:
         # Executor-side: chunk rows into NDJSON bulk bodies. Only
         # stdlib + this module's helpers are touched (pickled by
         # reference; workers import the repo package).
         buf: list[str] = []
-        pending = 0
+        pending = total = 0
 
         def flush() -> None:
             nonlocal buf, pending
@@ -246,11 +301,19 @@ def bulk_index(
                 )
             )
             pending += 1
+            total += 1
             if pending >= n:
                 flush()
         flush()
+        sent.add(total)
 
-    df.foreachPartition(send_partition)
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    known = set(sc.statusTracker().getJobIdsForGroup(group))
+    try:
+        rdd.foreachPartition(send_partition)
+    except Exception:
+        _await_job_tasks(sc, group, known)
+        raise
     # Make the write visible to immediate readers (the connector does
     # the same when es.batch.write.refresh is on, its default). 404 is
     # normal for a first-run append that delivered zero rows: no bulk
@@ -259,3 +322,4 @@ def bulk_index(
     _http(
         "POST", f"{es_url}/{index}/_refresh", body=b"", timeout=timeout, ignore=(404,)
     )
+    return sent.value

@@ -2135,7 +2135,12 @@ def selective_partition_delete(spark, path, part_col, pred, affected=None):
       survivor rows); the swap still deletes its target dir, so the
       "delete everything in month X" case removes the directory
       instead of leaving its old files readable (partition values
-      must be filesystem-safe; callers here use date strings)."""
+      must be filesystem-safe; callers here use date strings).
+      When EVERY row matches, every partition dir goes and the table
+      is left empty and schemaless (only ``_SUCCESS``): a schemaless
+      ``spark.read.parquet(path)`` then raises
+      UNABLE_TO_INFER_SCHEMA, so readers of a possibly emptied table
+      pass its schema (``spark.read.schema(...)``)."""
     import uuid
 
     from hive_to_es_spark.functions.merge import _hadoop_fs, fs_delete

@@ -14,7 +14,14 @@ the connector mapping).
 
 Scale posture: a job never materializes rows on the driver. Source ->
 sink is executor-parallel end to end; partitions are the bulk batches
-(es.batch.size.* tunes the per-partition HTTP chunking).
+(es.batch.size.* tunes the per-partition HTTP chunking). Each job is
+ONE Spark pass: the sink counts the rows it writes on the write itself
+(an Observation on parquet/connector writes, an accumulator inside the
+es_http bulk tasks), so the reported count is the written count and
+source -> transform never runs a second time to produce it. The
+es_http sink spreads a source narrower than the session's
+defaultParallelism across every core by hash-repartitioning on the
+document id (es_http.bulk_index).
 """
 
 from __future__ import annotations
@@ -22,7 +29,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hive_to_es_spark.io import es_writer_options, load_tables
@@ -113,9 +120,31 @@ def apply_transforms(df: DataFrame, job: Job) -> DataFrame:
     return df
 
 
-def write_sink(df: DataFrame, job: Job) -> None:
-    """Sink stage. Parquet in the test env; the ES branch builds the
+def write_sink(df: DataFrame, job: Job) -> int:
+    """Sink stage; returns the number of rows written, counted by the
+    write itself. Parquet in the test env; the ES branch builds the
     production writer (connector options only — no ES to hit here)."""
+    if job.sink_format == "es_http":
+        # Connector-free REST bulk path (es_http.bulk_index): same
+        # identity/mode semantics as the connector branch, executable
+        # against any HTTP endpoint — this is the branch that runs the
+        # bulk protocol for real in tests (mock ES server). It counts
+        # with an accumulator: an Observation never delivers on its
+        # foreachPartition action.
+        from hive_to_es_spark.es_http import bulk_index
+
+        return bulk_index(
+            df,
+            job.options.get("es.nodes", "http://localhost:9200"),
+            job.es_index or job.name,
+            id_column="_id" if "_id" in df.columns else None,
+            batch_entries=job.batch_entries,
+            mode=job.mode,
+        )
+    if job.sink_format not in ("parquet", "es"):
+        raise ValueError(f"job {job.name!r}: unknown sink_format {job.sink_format!r}")
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
     if job.sink_format == "parquet":
         path = job.sink_path or os.path.join(TMP_ROOT, job.name)
         writer = df.write.mode(job.mode)
@@ -124,7 +153,7 @@ def write_sink(df: DataFrame, job: Job) -> None:
             # downstream incremental reads prune on these columns.
             writer = writer.partitionBy(*job.partition_by)
         writer.parquet(path)
-    elif job.sink_format == "es":
+    else:
         opts = es_writer_options(
             job.es_index or job.name,
             id_column="_id" if "_id" in df.columns else None,
@@ -137,40 +166,28 @@ def write_sink(df: DataFrame, job: Job) -> None:
             .mode(job.mode)
             .save()
         )
-    elif job.sink_format == "es_http":
-        # Connector-free REST bulk path (es_http.bulk_index): same
-        # identity/mode semantics as the connector branch, executable
-        # against any HTTP endpoint — this is the branch that runs the
-        # bulk protocol for real in tests (mock ES server).
-        from hive_to_es_spark.es_http import bulk_index
-
-        bulk_index(
-            df,
-            job.options.get("es.nodes", "http://localhost:9200"),
-            job.es_index or job.name,
-            id_column="_id" if "_id" in df.columns else None,
-            batch_entries=job.batch_entries,
-            mode=job.mode,
-        )
-    else:
-        raise ValueError(f"job {job.name!r}: unknown sink_format {job.sink_format!r}")
+    return written.get["rows"]
 
 
-def run_job(spark: SparkSession, sf_dir: str, job: Job) -> DataFrame:
-    """Execute one job end to end; returns the written DataFrame (for
-    verification — the driver-side cost is plan construction only)."""
-    df = apply_transforms(build_source(spark, sf_dir, job), job)
-    write_sink(df, job)
-    return df
+def run_job(spark: SparkSession, sf_dir: str, job: Job) -> int:
+    """Execute one job end to end in a single Spark pass; returns the
+    number of rows the sink wrote. Its Spark jobs carry the
+    description ``sync:<job name>``, so stages map back to the sync
+    job (the caller's job group is left alone)."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"sync:{job.name}")
+    try:
+        return write_sink(apply_transforms(build_source(spark, sf_dir, job), job), job)
+    finally:
+        sc.setJobDescription(previous)
 
 
 def run_jobs(spark: SparkSession, sf_dir: str, jobs: list[Job]) -> DataFrame:
     """The multi-job runner (reference entry point): run every job in
-    the config, return a (job_name, n_rows) summary DataFrame."""
-    rows = []
-    for job in jobs:
-        df = run_job(spark, sf_dir, job)
-        rows.append((job.name, df.count()))
+    the config, return a (job_name, n_rows) summary DataFrame of the
+    rows each job wrote."""
+    rows = [(job.name, run_job(spark, sf_dir, job)) for job in jobs]
     return spark.createDataFrame(rows, "job_name string, n_rows long")
 
 

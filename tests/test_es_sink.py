@@ -40,11 +40,19 @@ class RecorderWriter:
 
 
 class FakeDF:
-    """The two df surfaces write_sink touches: .columns and .write."""
+    """The df surfaces write_sink touches: .columns, .write and
+    .observe. write_sink counts the rows it writes with an Observation,
+    whose get raises NO_OBSERVE_BEFORE_GET unless a real action ran:
+    observe runs one over an empty frame, so the fake writes 0 rows."""
 
-    def __init__(self, columns):
+    def __init__(self, columns, spark=None):
         self.columns = list(columns)
         self.write = RecorderWriter()
+        self.spark = spark
+
+    def observe(self, observation, *exprs):
+        self.spark.range(0).observe(observation, *exprs).collect()
+        return self
 
 
 def _es_job(**over) -> Job:
@@ -69,7 +77,7 @@ def _transformed_columns(spark, sf_dir, job):
 
 def test_es_full_sync_writer_contract(spark, sf_dir):
     job = _es_job()  # mode defaults to overwrite = full sync
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
     write_sink(fake, job)
     w = fake.write
     assert w.saved
@@ -85,18 +93,18 @@ def test_es_full_sync_writer_contract(spark, sf_dir):
 
 def test_es_incremental_sync_appends(spark, sf_dir):
     job = _es_job(mode="append", incremental_filter="o_orderdate >= date '1998-01-01'")
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
     write_sink(fake, job)
     assert fake.write.mode_value == "append"
     assert fake.write.opts["es.write.operation"] == "upsert"
 
 
-def test_es_keyless_source_gets_auto_id_but_no_upsert_without_transform():
+def test_es_keyless_source_gets_auto_id_but_no_upsert_without_transform(spark):
     """A frame that never went through apply_transforms has no _id —
     the sink must then OMIT es.mapping.id (ES auto-ids) rather than
     point it at a missing column."""
     job = _es_job(id_column=None)
-    fake = FakeDF(["order_id", "status"])  # no _id column
+    fake = FakeDF(["order_id", "status"], spark)  # no _id column
     write_sink(fake, job)
     assert "es.mapping.id" not in fake.write.opts
     assert "es.write.operation" not in fake.write.opts
@@ -109,14 +117,14 @@ def test_es_keyless_source_auto_id_via_transform(spark, sf_dir):
     job = _es_job(id_column=None)
     cols = _transformed_columns(spark, sf_dir, job)
     assert "_id" in cols
-    fake = FakeDF(cols)
+    fake = FakeDF(cols, spark)
     write_sink(fake, job)
     assert fake.write.opts["es.mapping.id"] == "_id"
 
 
 def test_es_job_options_override_defaults(spark, sf_dir):
     job = _es_job(options={"es.nodes": "es-prod:9200", "es.net.ssl": "true"})
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
     write_sink(fake, job)
     assert fake.write.opts["es.nodes"] == "es-prod:9200"  # job overrides default
     assert fake.write.opts["es.net.ssl"] == "true"  # passthrough extras survive
@@ -138,6 +146,7 @@ def test_unknown_sink_format_rejected():
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 
@@ -157,6 +166,7 @@ class MockES:
         reject_items_429_first_n: int = 0,
         fail_400_once_at: int | None = None,
         partial_429_at: int | None = None,
+        delay_s: float = 0.0,
     ):
         self.lock = threading.Lock()
         self.indices: dict[str, dict[str, dict]] = {}
@@ -179,6 +189,9 @@ class MockES:
         # per-item 429 — the mid-request overflow shape where a
         # whole-chunk retry would duplicate the accepted half
         self.partial_429_at = partial_429_at
+        # per-bulk latency, after the attempt is counted: keeps a job's
+        # tasks POSTing long enough to outlive a sibling's failure
+        self.delay_s = delay_s
         store = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -213,14 +226,19 @@ class MockES:
             def do_POST(self):
                 body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
                 if self.path.endswith("/_refresh"):
+                    index = self.path.strip("/").split("/")[0]
                     with store.lock:
-                        store.events.append(f"REFRESH {self.path.strip('/').split('/')[0]}")
+                        store.events.append(f"REFRESH {index}")
+                        exists = index in store.indices
+                    if not exists:  # real ES: refresh of a missing index is 404
+                        return self._reply(404, {"error": "index_not_found_exception"})
                     return self._reply(200, {"_shards": {"failed": 0}})
                 if not self.path.endswith("/_bulk"):
                     return self._reply(400, {"error": f"unsupported {self.path}"})
                 with store.lock:
                     store.bulk_attempts += 1
                     attempt_no = store.bulk_attempts
+                time.sleep(store.delay_s)
                 if attempt_no <= store.reject_429_first_n:
                     return self._reply(429, {"error": "es_rejected_execution"})
                 reject_all = attempt_no <= store.reject_items_429_first_n
@@ -342,8 +360,11 @@ def test_es_http_full_sync_roundtrip(spark, sf_dir, mock_es):
     batch_entries."""
     from hive_to_es_spark.pipeline import run_job
 
-    df = run_job(spark, sf_dir, _http_job(mock_es.url))
+    job = _http_job(mock_es.url)
+    n = run_job(spark, sf_dir, job)
+    df = apply_transforms(build_source(spark, sf_dir, job), job)
     rows = {str(r["_id"]): r for r in df.collect()}
+    assert n == len(rows) == 100
 
     docs = mock_es.indices["orders_http_v1"]
     assert set(docs) == set(rows)
@@ -483,7 +504,7 @@ def test_es_http_partial_item_429_keyless_retries_only_rejected(spark, sf_dir):
         df = (
             read_table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name")
-            .coalesce(1)  # one chunk -> the partial strike is attempt 1
+            .coalesce(1)  # narrower than the session: spread, so the strike hits one chunk of several
         )
         bulk_index(
             df,
@@ -547,7 +568,8 @@ def test_es_http_midstream_failure_then_replay_is_effectively_once(spark, sf_dir
         partial = dict(s.indices.get("orders_http_v1", {}))
         assert 0 < len(partial) < 100, "failure must strike mid-stream"
 
-        df = run_job(spark, sf_dir, job)  # the retry: full re-delivery
+        run_job(spark, sf_dir, job)  # the retry: full re-delivery
+        df = apply_transforms(build_source(spark, sf_dir, job), job)
         expected_ids = {str(r["_id"]) for r in df.collect()}
         docs = s.indices["orders_http_v1"]
         assert set(docs) == expected_ids and len(docs) == 100
@@ -557,6 +579,73 @@ def test_es_http_midstream_failure_then_replay_is_effectively_once(spark, sf_dir
         # than duplicating or skipping them
         for _id in partial:
             assert _id in docs
+    finally:
+        s.stop()
+
+
+def test_es_http_failed_run_leaves_no_straggler_posts(spark, sf_dir):
+    """When one task's chunk fails the job, bulk_index must not raise
+    while sibling tasks can still POST: a caller that retries with
+    overwrite (DELETE + PUT) would otherwise receive stale chunks of
+    the failed run. The source is one split, so it is spread over the
+    session's cores; every bulk takes 0.1 s, so siblings are still
+    sending when the 3rd bulk fails. After the raise the attempt count
+    must hold still past spark.python.task.killTimeout (2 s)."""
+    from py4j.protocol import Py4JJavaError
+
+    from hive_to_es_spark.es_http import bulk_index
+    from hive_to_es_spark.io import read_table
+
+    s = MockES(fail_400_once_at=3, delay_s=0.1)
+    try:
+        df = (
+            read_table(spark, sf_dir, "orders")
+            .orderBy("o_orderkey")
+            .limit(200)
+            .select("o_orderkey", "o_orderstatus")
+        )
+        with pytest.raises(Py4JJavaError):
+            bulk_index(
+                df, s.url, "orders_straggle_v1", id_column="o_orderkey",
+                batch_entries=5, mode="append",
+            )
+        attempts = s.bulk_attempts
+        time.sleep(2.5)
+        assert s.bulk_attempts == attempts, "a POST landed after bulk_index raised"
+    finally:
+        s.stop()
+
+
+def test_es_http_returns_the_stored_count(spark, sf_dir):
+    """bulk_index returns the documents it sent, counted on the write:
+    equal to what the mock stored for a clean one-split source (spread
+    over the session's cores, so at most one extra partial chunk per
+    task), and 0 for a zero-row append into a missing index, whose
+    refresh answers 404."""
+    from hive_to_es_spark.es_http import bulk_index
+    from hive_to_es_spark.io import read_table
+
+    s = MockES()
+    try:
+        df = (
+            read_table(spark, sf_dir, "orders")
+            .orderBy("o_orderkey")
+            .limit(150)
+            .select("o_orderkey", "o_orderstatus")
+        )
+        n = bulk_index(df, s.url, "orders_count_v1", id_column="o_orderkey", batch_entries=50)
+        assert n == len(s.indices["orders_count_v1"]) == sum(s.bulk_doc_counts) == 150
+        width = spark.sparkContext.defaultParallelism
+        assert len(s.bulk_doc_counts) <= 3 + width
+        if width > 1:
+            assert len(s.bulk_doc_counts) > 3, "one-split source was not spread"
+
+        n_empty = bulk_index(
+            df.filter("o_orderkey < 0"), s.url, "orders_empty_v1",
+            id_column="o_orderkey", mode="append",
+        )
+        assert n_empty == 0 and "orders_empty_v1" not in s.indices
+        assert s.events[-1] == "REFRESH orders_empty_v1"
     finally:
         s.stop()
 

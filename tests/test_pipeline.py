@@ -21,7 +21,7 @@ def test_run_job_end_to_end(spark, sf_dir, tmp_path):
     written = run_job(spark, sf_dir, job)
     back = spark.read.parquet(job.sink_path)
     assert set(back.columns) == {"order_id", "amount", "_id"}
-    assert back.count() == written.count() > 0
+    assert back.count() == written > 0
     # _id is the string form of the key column (idempotent upsert contract)
     bad = back.filter(F.col("_id") != F.col("order_id").cast("string")).count()
     assert bad == 0
@@ -58,7 +58,13 @@ def test_run_jobs_summary(spark, sf_dir, tmp_path):
         Job(name="a", source_table="region", sink_path=str(tmp_path / "a")),
         Job(name="b", source_table="nation", sink_path=str(tmp_path / "b")),
     ]
-    summary = {r.job_name: r.n_rows for r in run_jobs(spark, sf_dir, jobs).collect()}
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")  # run_job labels its jobs sync:<name>, then restores this
+    try:
+        summary = {r.job_name: r.n_rows for r in run_jobs(spark, sf_dir, jobs).collect()}
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
     assert summary == {"a": 5, "b": 25}
 
 
@@ -92,7 +98,7 @@ def test_catalog_table_source(spark, sf_dir, tmp_path):
             sink_path=str(tmp_path / "cat"),
         )
         written = run_job(spark, sf_dir, job)
-        assert written.count() == spark.read.parquet(job.sink_path).count() == 5
+        assert written == spark.read.parquet(job.sink_path).count() == 5
     finally:
         spark.sql("DROP TABLE IF EXISTS t_nation_cat")
 
@@ -185,6 +191,48 @@ def test_jobs_from_config_and_cli_roundtrip(spark, sf_dir, tmp_path):
         jobs_from_config({})
 
 
+def test_cli_main_prints_written_counts(spark, sf_dir, tmp_path, capsys):
+    """`python -m hive_to_es_spark --config` end to end: the one JSON
+    line it prints carries, per job, the rows its sink wrote — a full
+    job and an incremental job whose predicate selects nothing (an
+    empty append may leave no data file, so its read-back passes the
+    schema)."""
+    import json
+
+    from hive_to_es_spark.__main__ import main
+    from hive_to_es_spark.io import load_tables
+
+    full, incr = str(tmp_path / "nation_full"), str(tmp_path / "orders_none")
+    cfg = tmp_path / "jobs.json"
+    cfg.write_text(
+        json.dumps(
+            {
+                "jobs": [
+                    {"name": "nation_full", "source_table": "nation", "sink_path": full},
+                    {
+                        "name": "orders_none",
+                        "source_table": "orders",
+                        "incremental_filter": "o_orderkey < 0",
+                        "mode": "append",
+                        "sink_path": incr,
+                    },
+                ]
+            }
+        )
+    )
+    cpus = str(spark.sparkContext.defaultParallelism)  # reuse the session as built
+    assert main(["--config", str(cfg), "--sf-dir", sf_dir, "--cpus", cpus]) == 0
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    orders_schema = load_tables(spark, sf_dir).orders.schema
+    assert printed == {
+        "jobs": {
+            "nation_full": spark.read.parquet(full).count(),
+            "orders_none": spark.read.schema(orders_schema).parquet(incr).count(),
+        }
+    }
+    assert printed["jobs"]["nation_full"] == 25 and printed["jobs"]["orders_none"] == 0
+
+
 def test_incremental_sink_schema_evolution(spark, sf_dir, tmp_path):
     """The incremental-sync schema-drift story: a later job version
     adds a projected column. Appended files carry the wider schema;
@@ -210,8 +258,8 @@ def test_incremental_sink_schema_evolution(spark, sf_dir, tmp_path):
         mode="append",
         sink_path=sink,
     )
-    n1 = run_job(spark, sf_dir, v1).count()
-    n2 = run_job(spark, sf_dir, v2).count()
+    n1 = run_job(spark, sf_dir, v1)
+    n2 = run_job(spark, sf_dir, v2)
     assert n1 > 0 and n2 > 0
 
     merged = spark.read.option("mergeSchema", "true").parquet(sink)
