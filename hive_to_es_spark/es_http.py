@@ -12,17 +12,16 @@ verified against a real HTTP round-trip in tests/test_es_sink.py.
 Scale posture: the driver issues only O(1) index-lifecycle calls
 (DELETE / PUT / _refresh); every document flows executor-side through
 ``foreachPartition``, one POST per ``batch_entries`` chunk per task.
-A source with fewer splits than the session's ``defaultParallelism``
-is hash-repartitioned to ``defaultParallelism`` tasks on the id column
-(round-robin when there is none), so encoding and POSTs use every core
-even when the input is one file; all rows of one ``_id`` then meet in
-one task, which POSTs its chunks in order, so last-writer order per
-``_id`` holds. A source with at least ``defaultParallelism`` splits
-keeps its own partitioning and no shuffle is added; so does a plan
-that ends in a shuffle, whose task count AQE sizes from the data.
-The rows sent are counted by an accumulator inside the tasks (applied
-once per successful task) and returned, so the caller's row count is
-the written count, not a second execution of the source.
+Every source is hash-repartitioned to the session's
+``defaultParallelism`` tasks on the id column (round-robin when there
+is none), so encoding and POSTs use every core even when the input is
+one file. All rows of one ``_id`` then meet in one task, which POSTs
+them in the order their source split produced them, so a one-split
+source keeps last-writer order per ``_id`` (duplicates from different
+splits never had an order). The rows sent are counted by an
+accumulator inside the tasks (applied once per successful task) and
+returned, so the caller's row count is the written count, not a
+second execution of the source.
 
 Transient back-pressure (HTTP 429 bulk-queue rejection, 503) retries
 the same chunk in place with exponential backoff (the es-hadoop
@@ -35,7 +34,8 @@ documents, proven by tests/test_es_sink.py's mid-stream-failure
 replay. When one task fails the job, ``bulk_index`` waits until Spark
 has ended every sibling task of that job before it re-raises, so no
 chunk of the failed run can land after the caller sees the failure
-(and, say, retries with a DELETE + PUT). Rows never touch the driver.
+(and, say, retries with a DELETE + PUT); that wait is bounded, so a
+failed run always raises. Rows never touch the driver.
 """
 
 from __future__ import annotations
@@ -44,8 +44,10 @@ import base64
 import datetime
 import decimal
 import json
+import re
 import time
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 _NDJSON = "application/x-ndjson"
@@ -186,22 +188,53 @@ def _post_bulk(
         raise RuntimeError(f"bulk indexing reported errors: first={first}")
 
 
+# How long a failed bulk_index may wait for its tasks past Spark's
+# kill timeout. The bound is there so a failed run can never hang: if
+# the status store misses a job or task end (its listener queue drops
+# events when full), bulk_index re-raises at the deadline anyway.
+_AWAIT_MARGIN_S = 10.0
+_TIME_UNITS_S = {
+    "us": 1e-6, "ms": 1e-3, "s": 1.0, "m": 60.0, "min": 60.0, "h": 3600.0, "d": 86400.0
+}
+
+
+def _kill_timeout_s(sc) -> float:
+    """spark.python.task.killTimeout in seconds: how long a cancelled
+    Python task may keep running before Spark kills its worker. The
+    conf is a Spark time string (a bare number is milliseconds)."""
+    raw = sc.getConf().get("spark.python.task.killTimeout", "2s").strip().lower()
+    m = re.fullmatch(r"(\d+)\s*([a-z]*)", raw)
+    unit = _TIME_UNITS_S.get(m.group(2) or "ms") if m else None
+    return int(m.group(1)) * unit if unit else 2.0
+
+
 def _await_job_tasks(sc, group: str | None, known: set[int]) -> None:
     """Block until every task of the jobs started in job group `group`
-    since `known` was listed has ended. Spark raises a failed job to
-    the caller while it is still cancelling the job's other tasks, and
-    a cancelled Python task keeps running (and POSTing) until its
-    worker finishes or is killed (spark.python.task.killTimeout)."""
+    since `known` was listed has ended, or until the kill timeout plus
+    _AWAIT_MARGIN_S has passed. Spark raises a failed job to the
+    caller while it is still cancelling the job's other tasks, and a
+    cancelled Python task keeps running (and POSTing) until its worker
+    finishes or is killed (spark.python.task.killTimeout)."""
+    deadline = time.monotonic() + _kill_timeout_s(sc) + _AWAIT_MARGIN_S
     tracker = sc.statusTracker()
-    jobs = [tracker.getJobInfo(j) for j in set(tracker.getJobIdsForGroup(group)) - known]
-    # The status store learns of a job's end only after every event
-    # before it (task starts, stage completion): wait for that first,
-    # so no stage's active-task count is read before its tasks are.
-    while any(j is not None and j.status == "RUNNING" for j in jobs):
+
+    def new_jobs():
+        ids = set(tracker.getJobIdsForGroup(group)) - known
+        return [j for j in map(tracker.getJobInfo, ids) if j is not None]
+
+    # The status store is fed asynchronously: a job that failed fast
+    # may not be listed yet, and the store learns of a job's end only
+    # after every event before it (task starts, stage completion).
+    # Wait for both first, so no stage's active-task count is read
+    # before its tasks are.
+    jobs = new_jobs()
+    while (not jobs or any(j.status == "RUNNING" for j in jobs)) and (
+        time.monotonic() < deadline
+    ):
         time.sleep(0.05)
-        jobs = [tracker.getJobInfo(j.jobId) for j in jobs if j is not None]
-    stages = {s for j in jobs if j is not None for s in j.stageIds}
-    while any(
+        jobs = new_jobs()
+    stages = {s for j in jobs for s in j.stageIds}
+    while time.monotonic() < deadline and any(
         (info := tracker.getStageInfo(s)) is not None and info.numActiveTasks > 0
         for s in stages
     ):
@@ -249,20 +282,11 @@ def bulk_index(
         _http("PUT", f"{es_url}/{index}", body=b"{}", timeout=timeout)
 
     sc = df.sparkSession.sparkContext
-    width = sc.defaultParallelism
-    # An adaptive plan (one that ends in a shuffle) keeps its plan:
-    # AQE sizes its tasks from the data, and its split count is only
-    # known after its upstream stages ran — which a repartition on top
-    # would then run a second time.
-    plan = df._jdf.queryExecution().executedPlan()
-    adaptive = plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
-    rdd = df.rdd
-    if not adaptive and rdd.getNumPartitions() < width:
-        # A narrow source (one file is one split) would encode and
-        # POST every document from a few tasks. Hashing on the id keeps
-        # each _id's rows in one task, in their source order.
-        cols = [id_column] if id_column in df.columns else []
-        rdd = df.repartition(width, *cols).rdd
+    # Spread encoding and POSTs over every core whatever the source's
+    # split count (one file is one split). Hashing on the id keeps each
+    # _id's rows in one task, in their source order.
+    cols = [id_column] if id_column in df.columns else []
+    rdd = df.repartition(sc.defaultParallelism, *cols).rdd
 
     url, idx, idc = es_url, index, id_column
     n, to = int(batch_entries), float(timeout)
@@ -311,7 +335,9 @@ def bulk_index(
     known = set(sc.statusTracker().getJobIdsForGroup(group))
     try:
         rdd.foreachPartition(send_partition)
-    except Exception:
+    except Py4JJavaError:
+        # Only a JVM-side error can come from a submitted job; a
+        # Python-side one (say, pickling send_partition) started none.
         _await_job_tasks(sc, group, known)
         raise
     # Make the write visible to immediate readers (the connector does

@@ -16,12 +16,14 @@ Scale posture: a job never materializes rows on the driver. Source ->
 sink is executor-parallel end to end; partitions are the bulk batches
 (es.batch.size.* tunes the per-partition HTTP chunking). Each job is
 ONE Spark pass: the sink counts the rows it writes on the write itself
-(an Observation on parquet/connector writes, an accumulator inside the
-es_http bulk tasks), so the reported count is the written count and
-source -> transform never runs a second time to produce it. The
-es_http sink spreads a source narrower than the session's
-defaultParallelism across every core by hash-repartitioning on the
-document id (es_http.bulk_index).
+(an Observation on parquet writes, an accumulator inside the es_http
+bulk tasks), so the reported count is the written count and source ->
+transform never runs a second time to produce it. The production
+connector branch (`es`) is the exception: it still counts with
+df.count(), because an Observation is not filled through the
+connector's save (write_sink). The es_http sink spreads every source
+across the session's defaultParallelism cores by hash-repartitioning
+on the document id (es_http.bulk_index).
 """
 
 from __future__ import annotations
@@ -122,8 +124,39 @@ def apply_transforms(df: DataFrame, job: Job) -> DataFrame:
 
 def write_sink(df: DataFrame, job: Job) -> int:
     """Sink stage; returns the number of rows written, counted by the
-    write itself. Parquet in the test env; the ES branch builds the
-    production writer (connector options only — no ES to hit here)."""
+    write itself on parquet and es_http. Parquet in the test env; the
+    ES branch builds the production writer (connector options only —
+    no ES to hit here) and still counts with a second pass."""
+    if job.sink_format == "parquet":
+        written = Observation()
+        df = df.observe(written, F.count(F.lit(1)).alias("rows"))
+        path = job.sink_path or os.path.join(TMP_ROOT, job.name)
+        writer = df.write.mode(job.mode)
+        if job.partition_by:
+            # Hive-style layout: one directory per partition value —
+            # downstream incremental reads prune on these columns.
+            writer = writer.partitionBy(*job.partition_by)
+        writer.parquet(path)
+        return written.get["rows"]
+    if job.sink_format == "es":
+        opts = es_writer_options(
+            job.es_index or job.name,
+            id_column="_id" if "_id" in df.columns else None,
+            batch_entries=job.batch_entries,
+        )
+        opts.update(job.options)
+        (
+            df.write.format("org.elasticsearch.spark.sql")
+            .options(**opts)
+            .mode(job.mode)
+            .save()
+        )
+        # A second pass. The connector is a V1 relation provider: save()
+        # hands it a fresh Dataset of the plan, which it runs through
+        # its RDD, so an Observation on `df` would never be filled (and
+        # its get would block). An observed count needs checking against
+        # a real connector save first, which needs the es-hadoop jar.
+        return df.count()
     if job.sink_format == "es_http":
         # Connector-free REST bulk path (es_http.bulk_index): same
         # identity/mode semantics as the connector branch, executable
@@ -141,37 +174,13 @@ def write_sink(df: DataFrame, job: Job) -> int:
             batch_entries=job.batch_entries,
             mode=job.mode,
         )
-    if job.sink_format not in ("parquet", "es"):
-        raise ValueError(f"job {job.name!r}: unknown sink_format {job.sink_format!r}")
-    written = Observation()
-    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
-    if job.sink_format == "parquet":
-        path = job.sink_path or os.path.join(TMP_ROOT, job.name)
-        writer = df.write.mode(job.mode)
-        if job.partition_by:
-            # Hive-style layout: one directory per partition value —
-            # downstream incremental reads prune on these columns.
-            writer = writer.partitionBy(*job.partition_by)
-        writer.parquet(path)
-    else:
-        opts = es_writer_options(
-            job.es_index or job.name,
-            id_column="_id" if "_id" in df.columns else None,
-            batch_entries=job.batch_entries,
-        )
-        opts.update(job.options)
-        (
-            df.write.format("org.elasticsearch.spark.sql")
-            .options(**opts)
-            .mode(job.mode)
-            .save()
-        )
-    return written.get["rows"]
+    raise ValueError(f"job {job.name!r}: unknown sink_format {job.sink_format!r}")
 
 
 def run_job(spark: SparkSession, sf_dir: str, job: Job) -> int:
-    """Execute one job end to end in a single Spark pass; returns the
-    number of rows the sink wrote. Its Spark jobs carry the
+    """Execute one job end to end in a single Spark pass (two on the
+    `es` connector branch, see write_sink); returns the number of rows
+    the sink wrote. Its Spark jobs carry the
     description ``sync:<job name>``, so stages map back to the sync
     job (the caller's job group is left alone)."""
     sc = spark.sparkContext

@@ -40,19 +40,15 @@ class RecorderWriter:
 
 
 class FakeDF:
-    """The df surfaces write_sink touches: .columns, .write and
-    .observe. write_sink counts the rows it writes with an Observation,
-    whose get raises NO_OBSERVE_BEFORE_GET unless a real action ran:
-    observe runs one over an empty frame, so the fake writes 0 rows."""
+    """The df surfaces write_sink touches: .columns, .write and .count
+    (the connector branch counts with a second pass)."""
 
-    def __init__(self, columns, spark=None):
+    def __init__(self, columns):
         self.columns = list(columns)
         self.write = RecorderWriter()
-        self.spark = spark
 
-    def observe(self, observation, *exprs):
-        self.spark.range(0).observe(observation, *exprs).collect()
-        return self
+    def count(self) -> int:
+        return 0
 
 
 def _es_job(**over) -> Job:
@@ -77,7 +73,7 @@ def _transformed_columns(spark, sf_dir, job):
 
 def test_es_full_sync_writer_contract(spark, sf_dir):
     job = _es_job()  # mode defaults to overwrite = full sync
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
     write_sink(fake, job)
     w = fake.write
     assert w.saved
@@ -93,18 +89,18 @@ def test_es_full_sync_writer_contract(spark, sf_dir):
 
 def test_es_incremental_sync_appends(spark, sf_dir):
     job = _es_job(mode="append", incremental_filter="o_orderdate >= date '1998-01-01'")
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
     write_sink(fake, job)
     assert fake.write.mode_value == "append"
     assert fake.write.opts["es.write.operation"] == "upsert"
 
 
-def test_es_keyless_source_gets_auto_id_but_no_upsert_without_transform(spark):
+def test_es_keyless_source_gets_auto_id_but_no_upsert_without_transform():
     """A frame that never went through apply_transforms has no _id —
     the sink must then OMIT es.mapping.id (ES auto-ids) rather than
     point it at a missing column."""
     job = _es_job(id_column=None)
-    fake = FakeDF(["order_id", "status"], spark)  # no _id column
+    fake = FakeDF(["order_id", "status"])  # no _id column
     write_sink(fake, job)
     assert "es.mapping.id" not in fake.write.opts
     assert "es.write.operation" not in fake.write.opts
@@ -117,14 +113,14 @@ def test_es_keyless_source_auto_id_via_transform(spark, sf_dir):
     job = _es_job(id_column=None)
     cols = _transformed_columns(spark, sf_dir, job)
     assert "_id" in cols
-    fake = FakeDF(cols, spark)
+    fake = FakeDF(cols)
     write_sink(fake, job)
     assert fake.write.opts["es.mapping.id"] == "_id"
 
 
 def test_es_job_options_override_defaults(spark, sf_dir):
     job = _es_job(options={"es.nodes": "es-prod:9200", "es.net.ssl": "true"})
-    fake = FakeDF(_transformed_columns(spark, sf_dir, job), spark)
+    fake = FakeDF(_transformed_columns(spark, sf_dir, job))
     write_sink(fake, job)
     assert fake.write.opts["es.nodes"] == "es-prod:9200"  # job overrides default
     assert fake.write.opts["es.net.ssl"] == "true"  # passthrough extras survive
@@ -504,7 +500,7 @@ def test_es_http_partial_item_429_keyless_retries_only_rejected(spark, sf_dir):
         df = (
             read_table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name")
-            .coalesce(1)  # narrower than the session: spread, so the strike hits one chunk of several
+            .coalesce(1)  # spread over the session's cores: the strike hits one chunk of several
         )
         bulk_index(
             df,
@@ -614,6 +610,23 @@ def test_es_http_failed_run_leaves_no_straggler_posts(spark, sf_dir):
         assert s.bulk_attempts == attempts, "a POST landed after bulk_index raised"
     finally:
         s.stop()
+
+
+def test_es_http_failure_wait_is_bounded(spark, monkeypatch):
+    """The straggler wait reads Spark's status store, which is fed
+    asynchronously and can miss a job altogether (its listener queue
+    drops events when full). The wait must then end at its deadline,
+    so a failed run always raises: here no new job ever appears."""
+    from hive_to_es_spark import es_http
+
+    sc = spark.sparkContext
+    assert es_http._kill_timeout_s(sc) == 2.0  # Spark's default "2s"
+    monkeypatch.setattr(es_http, "_kill_timeout_s", lambda sc: 0.3)
+    monkeypatch.setattr(es_http, "_AWAIT_MARGIN_S", 0.0)
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    t0 = time.monotonic()
+    es_http._await_job_tasks(sc, group, set(sc.statusTracker().getJobIdsForGroup(group)))
+    assert 0.3 <= time.monotonic() - t0 < 5.0
 
 
 def test_es_http_returns_the_stored_count(spark, sf_dir):
