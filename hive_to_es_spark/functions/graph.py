@@ -132,6 +132,24 @@ def connected_components(
     return result
 
 
+def components_ctes(nodes: str, id_col: str, pairs: str, a: str, b: str) -> str:
+    """DuckDB twin of connected_components: CTEs edges (the pairs
+    `pairs`(a, b), symmetrized), reach (reachability from every node
+    of `nodes`.`id_col`) and components (id, component = min reachable
+    id). The caller's WITH must be RECURSIVE."""
+    return f"""edges AS (
+  SELECT {a} AS a, {b} AS b FROM {pairs}
+  UNION ALL
+  SELECT {b} AS a, {a} AS b FROM {pairs}
+),
+reach AS (
+  SELECT {id_col} AS id, {id_col} AS r FROM {nodes}
+  UNION
+  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a
+),
+components AS (SELECT id, min(r) AS component FROM reach GROUP BY id)"""
+
+
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,

@@ -19,9 +19,16 @@ from hive_to_es_spark.io import load_tables, table_row_count
 
 _LOG = logging.getLogger(__name__)
 _SUBHALF_THRESHOLD_LOGGED = False  # once-per-process log gate (d16/e11)
+from hive_to_es_spark.functions.graph import components_ctes
 from hive_to_es_spark.functions.lifecycle import materialize
 from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
-from hive_to_es_spark.operators.similarity import _dbl, _dot, _norm
+from hive_to_es_spark.operators.similarity import (
+    SIGN_BUCKET_SQL,
+    _dbl,
+    _dot,
+    _norm,
+    ivf_codebook_sql,
+)
 from hive_to_es_spark.registry import register
 
 
@@ -112,31 +119,6 @@ def d3_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_signatures(d).orderBy("doc_id")
 
 
-# The document-frequency cap (QUALIFY window) mirrors the Spark-side
-# hot-shingle filter exactly.
-_D4_ORACLE = f"""
-WITH sh0 AS (
-  {shingle_sql()}
-),
-sh AS (
-  SELECT doc_id, shingle FROM sh0
-  QUALIFY count(*) OVER (PARTITION BY shingle) <= 1000
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-"""
-
-
 def capped_shingles(
     docs: DataFrame, df_cap: int, checkpoint_dir: str | None = None
 ) -> DataFrame:
@@ -171,6 +153,14 @@ def capped_shingles(
     return materialize(
         sh0.join(F.broadcast(hot), "shingle", "left_anti"), checkpoint_dir
     )
+
+
+def capped_shingle_sql(df_cap: int, source: str = "documents") -> str:
+    """DuckDB twin of capped_shingles over the relation `source`: the
+    hot-shingle cap as a QUALIFY window, the same rows as the Spark
+    side's aggregate + anti join."""
+    return f"""SELECT doc_id, shingle FROM ({shingle_sql(source)})
+  QUALIFY count(*) OVER (PARTITION BY shingle) <= {df_cap}"""
 
 
 # Corpus-size gate for ngram_jaccard_pairs (the w7->w8 auto-gate
@@ -290,30 +280,67 @@ def ngram_jaccard_pairs(
     return _jaccard_from_common(common, sizes, threshold)
 
 
+def _jaccard_from_common(
+    common: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Shared tail of d4/d10: join per-doc set sizes onto intersection
+    counts, threshold on the UNROUNDED Jaccard (the repo rule — a
+    rounded filter would disagree with the oracle at the boundary),
+    round to 6dp for output."""
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    return (
+        common.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(jac >= threshold)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    )
+
+
+def jaccard_pair_ctes(sh: str, threshold: float) -> str:
+    """DuckDB twin of the shared-shingle self-join + _jaccard_from_common
+    over the (doc_id, shingle) relation `sh`: CTEs sizes, common and
+    pairs (doc_a, doc_b, jaccard), thresholded on the unrounded
+    Jaccard."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM {sh} GROUP BY doc_id),
+common AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+  FROM {sh} a JOIN {sh} b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+),
+pairs AS (
+  SELECT doc_a, doc_b,
+         round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
+  FROM common
+  JOIN sizes sa ON sa.doc_id = doc_a
+  JOIN sizes sb ON sb.doc_id = doc_b
+  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {threshold}
+)"""
+
+
+_D4_ORACLE = f"""
+WITH sh AS ({capped_shingle_sql(1000)}),
+{jaccard_pair_ctes("sh", 0.2)}
+SELECT doc_a, doc_b, jaccard FROM pairs
+"""
+
+
 # TRUE Jaccard over full shingle sets — no df cap: the oracle states
 # pure semantics (every pair with J >= t). Shared by d10 (t=0.8, prefix
 # filter) and d11 (t=0.2, MinHash prefilter): for both, completeness
 # of the Spark side's candidate generation is exactly what the hash
 # compare proves.
-_EXACT_JACCARD_ORACLE = f"""
-WITH sh AS (
-  {shingle_sql()}
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b,
-       round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= {{t}}
+def _exact_jaccard_oracle(threshold: float) -> str:
+    return f"""
+WITH sh AS ({shingle_sql()}),
+{jaccard_pair_ctes("sh", threshold)}
+SELECT doc_a, doc_b, jaccard FROM pairs
 """
-_D10_ORACLE = _EXACT_JACCARD_ORACLE.format(t=0.8)
-_D11_ORACLE = _EXACT_JACCARD_ORACLE.format(t=0.2)
+
+
+_D10_ORACLE = _exact_jaccard_oracle(0.8)
+_D11_ORACLE = _exact_jaccard_oracle(0.2)
 
 
 def prefix_jaccard_candidates(docs: DataFrame, threshold: float) -> DataFrame:
@@ -372,24 +399,6 @@ def _prefix_candidates(sh: DataFrame, sizes: DataFrame, threshold: float) -> Dat
         )
         .select("doc_a", "doc_b")
         .distinct()
-    )
-
-
-def _jaccard_from_common(
-    common: DataFrame, sizes: DataFrame, threshold: float
-) -> DataFrame:
-    """Shared tail of d4/d10: join per-doc set sizes onto intersection
-    counts, threshold on the UNROUNDED Jaccard (the repo rule — a
-    rounded filter would disagree with the oracle at the boundary),
-    round to 6dp for output."""
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
 
@@ -724,13 +733,9 @@ def d5_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlabeled corpus actually runs. Sign buckets are engine-portable, so
 # the whole path gets a full value-level oracle (d2/d3's MinHash and
 # xxhash variants could not).
-_D6_ORACLE = """
+_D6_ORACLE = f"""
 WITH bucketed AS (
-  SELECT vec_id,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket,
+  SELECT vec_id, {SIGN_BUCKET_SQL} AS bucket,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings
 )
@@ -812,13 +817,9 @@ def d6_dedup_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pair set under the sign-bucket plan is (proven by d6's oracle).
 # Threshold 0.2 (vs d6's 0.3) so fixture components reach size ~6 and
 # propagation genuinely runs multiple rounds.
-_D7_ORACLE = """
+_D7_ORACLE = f"""
 WITH RECURSIVE bucketed AS (
-  SELECT vec_id,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket,
+  SELECT vec_id, {SIGN_BUCKET_SQL} AS bucket,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings
 ),
@@ -828,19 +829,10 @@ pairs AS (
     ON a.bucket = b.bucket AND a.vec_id < b.vec_id
   WHERE list_cosine_similarity(a.ev, b.ev) >= 0.2
 ),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION ALL
-  SELECT id_b AS a, id_a AS b FROM pairs
-),
-reach AS (
-  SELECT vec_id AS id, vec_id AS r FROM embeddings
-  UNION
-  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a
-)
-SELECT id AS vec_id, min(r) AS component_id,
-       CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
-FROM reach GROUP BY id
+{components_ctes("embeddings", "vec_id", "pairs", "id_a", "id_b")}
+SELECT id AS vec_id, component AS component_id,
+       CAST(CASE WHEN component = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
+FROM components
 """
 
 
@@ -878,24 +870,6 @@ def d7_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8x1 (threshold ~ (1/b)^(1/r): high-recall candidate generation);
 # estimated Jaccard = matching-component fraction, gated at 0.25.
 _D8_N_HASHES = 8
-_D8_ORACLE = f"""
-WITH shingles AS ({shingle_sql()}),
-mh AS (
-  SELECT doc_id,
-    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
-  FROM shingles GROUP BY doc_id
-),
-bands AS ({' UNION ALL '.join(f"SELECT doc_id, {i} AS band, mh{i} AS mh FROM mh" for i in range(_D8_N_HASHES))}),
-cand AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y
-    ON x.band = y.band AND x.mh = y.mh AND x.doc_id < y.doc_id
-)
-SELECT id_a, id_b,
-       ({' + '.join(f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(_D8_N_HASHES))}) / {_D8_N_HASHES}.0 AS est_jaccard
-FROM cand JOIN mh a ON id_a = a.doc_id JOIN mh b ON id_b = b.doc_id
-WHERE ({' + '.join(f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(_D8_N_HASHES))}) / {_D8_N_HASHES}.0 >= 0.25
-"""
 
 
 def portable_minhash_candidates(d: DataFrame):
@@ -960,6 +934,44 @@ def portable_minhash_candidates(d: DataFrame):
     return shingles, mh, cand, scored
 
 
+def portable_minhash_ctes(shingles: str) -> str:
+    """DuckDB twin of portable_minhash_candidates over the (doc_id,
+    shingle) relation `shingles`: CTEs mh (signatures), bands, cand
+    (id_a, id_b) and scored (cand with est_jaccard)."""
+    n = _D8_N_HASHES
+    mins = ", ".join(
+        f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}"
+        for i in range(n)
+    )
+    bands = " UNION ALL ".join(
+        f"SELECT doc_id, {i} AS band, mh{i} AS mh FROM mh" for i in range(n)
+    )
+    matches = " + ".join(
+        f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(n)
+    )
+    return f"""mh AS (
+  SELECT doc_id, {mins}
+  FROM {shingles} GROUP BY doc_id
+),
+bands AS ({bands}),
+cand AS (
+  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+  FROM bands x JOIN bands y
+    ON x.band = y.band AND x.mh = y.mh AND x.doc_id < y.doc_id
+),
+scored AS (
+  SELECT id_a, id_b, ({matches}) / {n}.0 AS est_jaccard
+  FROM cand JOIN mh a ON id_a = a.doc_id JOIN mh b ON id_b = b.doc_id
+)"""
+
+
+_D8_ORACLE = f"""
+WITH shingles AS ({shingle_sql()}),
+{portable_minhash_ctes("shingles")}
+SELECT id_a, id_b, est_jaccard FROM scored WHERE est_jaccard >= 0.25
+"""
+
+
 @register("d8_dedup_minhash_portable", _D8_ORACLE)
 def d8_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates with salted md5-prefix hashes —
@@ -984,38 +996,12 @@ def d8_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d4's exact n-gram Jaccard pairs closed into transitive duplicate
 # groups. Keep-min-id per component = the surviving corpus.
 _D9_ORACLE = f"""
-WITH RECURSIVE sh0 AS (
-  {shingle_sql()}
-),
-sh AS (
-  SELECT doc_id, shingle FROM sh0
-  QUALIFY count(*) OVER (PARTITION BY shingle) <= 1000
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id AS id, doc_id AS r FROM documents
-  UNION
-  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a
-)
-SELECT id AS doc_id, min(r) AS group_id,
-       CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
-FROM reach GROUP BY id
+WITH RECURSIVE sh AS ({capped_shingle_sql(1000)}),
+{jaccard_pair_ctes("sh", 0.2)},
+{components_ctes("documents", "doc_id", "pairs", "doc_a", "doc_b")}
+SELECT id AS doc_id, component AS group_id,
+       CAST(CASE WHEN component = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
+FROM components
 """
 
 
@@ -1046,34 +1032,12 @@ def d9_text_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _D12_ORACLE = f"""
-WITH RECURSIVE sh AS (
-  {shingle_sql()}
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) >= 0.2
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id AS id, doc_id AS r FROM documents
-  UNION
-  SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a
-)
-SELECT id AS doc_id, min(r) AS group_id,
-       CAST(CASE WHEN min(r) = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
-FROM reach GROUP BY id
+WITH RECURSIVE sh AS ({shingle_sql()}),
+{jaccard_pair_ctes("sh", 0.2)},
+{components_ctes("documents", "doc_id", "pairs", "doc_a", "doc_b")}
+SELECT id AS doc_id, component AS group_id,
+       CAST(CASE WHEN component = id THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
+FROM components
 """
 
 
@@ -1121,110 +1085,6 @@ def d12_dup_groups_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # truth, pair by pair. est/exact/err per candidate, ALL candidates
 # (no est threshold — the low-est tail is exactly where accuracy
 # reporting matters).
-_D13_ORACLE = f"""
-WITH shingles AS ({shingle_sql()}),
-mh AS (
-  SELECT doc_id,
-    {', '.join(f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}" for i in range(_D8_N_HASHES))}
-  FROM shingles GROUP BY doc_id
-),
-bands AS ({' UNION ALL '.join(f"SELECT doc_id, {i} AS band, mh{i} AS mh FROM mh" for i in range(_D8_N_HASHES))}),
-cand AS (
-  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-  FROM bands x JOIN bands y
-    ON x.band = y.band AND x.mh = y.mh AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_common
-  FROM cand c
-  JOIN shingles x ON x.doc_id = c.id_a
-  JOIN shingles y ON y.doc_id = c.id_b AND y.shingle = x.shingle
-  GROUP BY c.id_a, c.id_b
-),
-scored AS (
-  SELECT c.id_a, c.id_b,
-         round(({' + '.join(f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END" for i in range(_D8_N_HASHES))}) / {_D8_N_HASHES}.0, 6) AS est_jaccard,
-         round(CAST(coalesce(i.n_common, 0) AS DOUBLE)
-               / (sa.n + sb.n - coalesce(i.n_common, 0)), 6) AS exact_jaccard
-  FROM cand c
-  JOIN mh a ON c.id_a = a.doc_id
-  JOIN mh b ON c.id_b = b.doc_id
-  JOIN sizes sa ON c.id_a = sa.doc_id
-  JOIN sizes sb ON c.id_b = sb.doc_id
-  LEFT JOIN inter i ON c.id_a = i.id_a AND c.id_b = i.id_b
-)
-SELECT id_a, id_b, est_jaccard, exact_jaccard,
-       round(abs(est_jaccard - exact_jaccard), 6) AS abs_err
-FROM scored
-"""
-
-
-@register("d13_sketch_accuracy", _D13_ORACLE)
-def d13_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-accuracy audit: for every banded-MinHash candidate pair,
-    the signature's Jaccard ESTIMATE next to the exact shingle-set
-    Jaccard and the absolute error — the measurement every
-    sketch-tuned dedup pipeline owes its operator ("are 8 hashes
-    enough at our threshold?"). d8's candidates and signatures are
-    reused verbatim (portable_minhash_candidates), so this op is the
-    ACCURACY COLUMN for d8's production decisions: E[|err|] ~
-    sqrt(J(1-J)/k) at k hashes; raising k moves it as 1/sqrt(k) with
-    no plan change.
-
-    Cost shape: the exact verify joins each candidate pair back to
-    its two shingle sets — |candidates| x |doc| work, bounded by the
-    banded blocking exactly as in d11's verify stage; the estimate
-    itself is one 8-column compare on the already-joined signatures.
-    At 100 TB you run this on a hash-sampled slice (o4) — accuracy
-    is a population statistic, not a per-corpus scan obligation;
-    d13_sketch_accuracy_sampled below is that posture, and SCALE.md's
-    audit-pair section proves its cost stays ~constant while this full
-    form grows with the candidate stream."""
-    return sketch_accuracy_frame(load_tables(spark, sf_dir).documents)
-
-
-_D13S_N_DOCS = 200  # < the smallest fixture corpus (500 docs), so the
-# sampled audit is non-vacuous (a strict subset) at every test SF
-
-_D13S_ORACLE = (
-    "\nWITH doc_slice AS (\n"
-    "  SELECT * FROM documents\n"
-    "  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id\n"
-    f"  LIMIT {_D13S_N_DOCS}\n"
-    "),\n"
-    + _D13_ORACLE.lstrip().removeprefix("WITH ").replace(
-        "FROM documents", "FROM doc_slice"
-    )
-)
-
-
-@register("d13_sketch_accuracy_sampled", _D13S_ORACLE)
-def d13_sketch_accuracy_sampled(
-    spark: SparkSession, sf_dir: str, n_docs: int = _D13S_N_DOCS
-) -> DataFrame:
-    """d13's documented production posture, registered as its own key
-    (round-11 verdict task 3: the full audit is the inventory's most
-    expensive op — 174 s at the 16x rung, b=1.51 — while the posture
-    the docs recommend was invisible to the driver): the same audit on
-    a DETERMINISTIC fixed-size hash-sampled slice. Sketch accuracy is
-    a population statistic — E[|err|] per candidate pair does not
-    depend on corpus size — so a fixed-size slice answers the tuning
-    question ("are 8 hashes enough at our threshold?") at fixed cost
-    no matter how large the corpus grows. The slice is the first
-    `n_docs` docs in md5(doc_id) order (o8's deterministic-shuffle
-    trick — a global top-k by hash is one reduce of per-partition
-    top-ks, scan-side at any scale), so the audit population is
-    reproducible across reruns and engines; at real scale you'd use
-    o4's rate predicate (bucket < rate, no sort at all) with the rate
-    chosen to land the same absolute sample size."""
-    d = load_tables(spark, sf_dir).documents
-    slice_ = d.orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    ).limit(n_docs)
-    return sketch_accuracy_frame(slice_)
-
-
 def sketch_accuracy_frame(docs: DataFrame) -> DataFrame:
     """The d13 audit plan over an arbitrary documents frame (full
     corpus for the registered oracle key, a hash-sampled slice for the
@@ -1260,11 +1120,109 @@ def sketch_accuracy_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-# d14 — canonical-copy selection: reuses d12's full pair+closure SQL
-# verbatim (string-sliced so the two oracles can never drift apart)
-# and replaces the min-id survivor rule with the production one.
-_D14_ORACLE = _D12_ORACLE.rsplit("SELECT id AS doc_id", 1)[0] + """,
-comp AS (SELECT id AS doc_id, min(r) AS group_id FROM reach GROUP BY id),
+def sketch_accuracy_sql(source: str) -> str:
+    """DuckDB twin of sketch_accuracy_frame over the relation `source`."""
+    return f"""
+WITH shingles AS ({shingle_sql(source)}),
+{portable_minhash_ctes("shingles")},
+sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
+inter AS (
+  SELECT c.id_a, c.id_b, count(*) AS n_common
+  FROM cand c
+  JOIN shingles x ON x.doc_id = c.id_a
+  JOIN shingles y ON y.doc_id = c.id_b AND y.shingle = x.shingle
+  GROUP BY c.id_a, c.id_b
+),
+audit AS (
+  SELECT s.id_a, s.id_b,
+         round(s.est_jaccard, 6) AS est_jaccard,
+         round(CAST(coalesce(i.n_common, 0) AS DOUBLE)
+               / (sa.n + sb.n - coalesce(i.n_common, 0)), 6) AS exact_jaccard
+  FROM scored s
+  JOIN sizes sa ON s.id_a = sa.doc_id
+  JOIN sizes sb ON s.id_b = sb.doc_id
+  LEFT JOIN inter i ON s.id_a = i.id_a AND s.id_b = i.id_b
+)
+SELECT id_a, id_b, est_jaccard, exact_jaccard,
+       round(abs(est_jaccard - exact_jaccard), 6) AS abs_err
+FROM audit
+"""
+
+
+_D13_ORACLE = sketch_accuracy_sql("documents")
+
+
+@register("d13_sketch_accuracy", _D13_ORACLE)
+def d13_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-accuracy audit: for every banded-MinHash candidate pair,
+    the signature's Jaccard ESTIMATE next to the exact shingle-set
+    Jaccard and the absolute error — the measurement every
+    sketch-tuned dedup pipeline owes its operator ("are 8 hashes
+    enough at our threshold?"). d8's candidates and signatures are
+    reused verbatim (portable_minhash_candidates), so this op is the
+    ACCURACY COLUMN for d8's production decisions: E[|err|] ~
+    sqrt(J(1-J)/k) at k hashes; raising k moves it as 1/sqrt(k) with
+    no plan change.
+
+    Cost shape: the exact verify joins each candidate pair back to
+    its two shingle sets — |candidates| x |doc| work, bounded by the
+    banded blocking exactly as in d11's verify stage; the estimate
+    itself is one 8-column compare on the already-joined signatures.
+    At 100 TB you run this on a hash-sampled slice (o4) — accuracy
+    is a population statistic, not a per-corpus scan obligation;
+    d13_sketch_accuracy_sampled below is that posture, and SCALE.md's
+    audit-pair section proves its cost stays ~constant while this full
+    form grows with the candidate stream."""
+    return sketch_accuracy_frame(load_tables(spark, sf_dir).documents)
+
+
+_D13S_N_DOCS = 200  # < the smallest fixture corpus (500 docs), so the
+# sampled audit is non-vacuous (a strict subset) at every test SF
+
+_D13S_ORACLE = f"""
+WITH doc_slice AS (
+  SELECT * FROM documents
+  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+  LIMIT {_D13S_N_DOCS}
+)
+SELECT * FROM ({sketch_accuracy_sql("doc_slice")})
+"""
+
+
+@register("d13_sketch_accuracy_sampled", _D13S_ORACLE)
+def d13_sketch_accuracy_sampled(
+    spark: SparkSession, sf_dir: str, n_docs: int = _D13S_N_DOCS
+) -> DataFrame:
+    """d13's documented production posture, registered as its own key
+    (round-11 verdict task 3: the full audit is the inventory's most
+    expensive op — 174 s at the 16x rung, b=1.51 — while the posture
+    the docs recommend was invisible to the driver): the same audit on
+    a DETERMINISTIC fixed-size hash-sampled slice. Sketch accuracy is
+    a population statistic — E[|err|] per candidate pair does not
+    depend on corpus size — so a fixed-size slice answers the tuning
+    question ("are 8 hashes enough at our threshold?") at fixed cost
+    no matter how large the corpus grows. The slice is the first
+    `n_docs` docs in md5(doc_id) order (o8's deterministic-shuffle
+    trick — a global top-k by hash is one reduce of per-partition
+    top-ks, scan-side at any scale), so the audit population is
+    reproducible across reruns and engines; at real scale you'd use
+    o4's rate predicate (bucket < rate, no sort at all) with the rate
+    chosen to land the same absolute sample size."""
+    d = load_tables(spark, sf_dir).documents
+    slice_ = d.orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
+    ).limit(n_docs)
+    return sketch_accuracy_frame(slice_)
+
+
+# d14 — canonical-copy selection: d12's pair graph and closure,
+# composed from the same fragments as d12's oracle, with the min-id
+# survivor rule replaced by the production one.
+_D14_ORACLE = f"""
+WITH RECURSIVE sh AS ({shingle_sql()}),
+{jaccard_pair_ctes("sh", 0.2)},
+{components_ctes("documents", "doc_id", "pairs", "doc_a", "doc_b")},
+comp AS (SELECT id AS doc_id, component AS group_id FROM components),
 scored AS (
   SELECT c.doc_id, c.group_id, d.n_chars
   FROM comp c JOIN documents d USING (doc_id)
@@ -1298,8 +1256,8 @@ def d14_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard >= 0.2, min-label components); the added survivor election
     is one row_number window PARTITIONed BY component — components
     are duplicate clusters, small by nature, so the window never sees
-    a skewed partition. The oracle reuses d12's recursive-CTE text
-    verbatim (sliced, not copied) so the two contracts stay welded."""
+    a skewed partition. The oracle is composed from the same pair-graph
+    and closure fragments as d12's, so the two contracts stay welded."""
     from hive_to_es_spark.functions.graph import connected_components
 
     d = load_tables(spark, sf_dir).documents
@@ -1348,20 +1306,7 @@ _D15_ORACLE = f"""
 WITH d AS (
   SELECT doc_id, lower(text) AS t, length(lower(text)) AS n FROM documents
 ),
-sh0 AS (
-  SELECT doc_id, unnest(list_distinct(
-    list_transform(
-      range(1, greatest(len(string_split(t, ' ')) - 2, 1) + 1),
-      i -> concat_ws(' ', string_split(t, ' ')[i],
-                          string_split(t, ' ')[i+1],
-                          string_split(t, ' ')[i+2])
-    ))) AS shingle
-  FROM d
-),
-sh AS (
-  SELECT doc_id, md5(shingle) AS h FROM sh0
-  QUALIFY count(*) OVER (PARTITION BY shingle) <= {_D15_DF_CAP}
-),
+sh AS (SELECT doc_id, md5(shingle) AS h FROM ({capped_shingle_sql(_D15_DF_CAP)})),
 mn AS (SELECT doc_id, min(h) AS minsh FROM sh GROUP BY doc_id),
 cand AS (
   SELECT a.doc_id AS contained_id, b.doc_id AS container_id
@@ -1620,13 +1565,8 @@ def d16_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D17_TAU = 0.3
 
 _D17_ORACLE = f"""
-WITH comp AS (
-  SELECT label, j, avg(CAST(embedding[j] AS DOUBLE)) AS cv
-  FROM embeddings CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
+WITH codebook AS (
+  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,

@@ -2663,9 +2663,10 @@ def p25_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The ORACLE restates every stage predicate relationally over the
 # same shared SQL (url render/canon helpers, LANGID_CTES,
-# QUALITY_CTE_SQL, the exact-Jaccard pair SQL of d10/d11, o10's
-# integer quota math) and derives the same level census — engine
-# drift in ANY stage shifts at least one accounting cell.
+# QUALITY_CTE_SQL, the token_lines_sql chunker, d10/d11's
+# exact-Jaccard jaccard_pair_ctes, o10's integer quota math) and
+# derives the same level census — engine drift in ANY stage shifts at
+# least one accounting cell.
 # ---------------------------------------------------------------------------
 
 _P26_LANGS = ("en", "de", "fr")
@@ -2689,6 +2690,7 @@ _P26_STAGES = (
 
 def _p26_oracle() -> str:
     from hive_to_es_spark.operators.dedup import shingle_sql
+    from hive_to_es_spark.operators.dedup_ext import jaccard_pair_ctes
     from hive_to_es_spark.operators.scalars import (
         surface_url_sql,
         url_canon_sql,
@@ -2699,13 +2701,13 @@ def _p26_oracle() -> str:
         _T21_LINE_TOKS,
         LANGID_CTES,
         QUALITY_CTE_SQL,
+        token_lines_sql,
     )
 
     langid_frag = LANGID_CTES.strip()[len("WITH ") :]
     url = surface_url_sql(
         "doc_id % 4", "doc_id // 4", "(doc_id // 4) % 7"
     )
-    lt = _T21_LINE_TOKS
     stage_values = ", ".join(
         f"({i + 1}, '{s}')" for i, s in enumerate(_P26_STAGES)
     )
@@ -2729,10 +2731,7 @@ g2 AS (
 ),
 g3 AS (SELECT doc_id, quality >= {_P26_QUALITY_MIN} AS q_ok FROM scored),
 repl AS (
-  SELECT doc_id, toks,
-         list_transform(range(1, (len(toks) + {lt - 1}) // {lt} + 1),
-           i -> array_to_string(toks[(i - 1) * {lt} + 1 : i * {lt}], ' '))
-           AS ls
+  SELECT doc_id, toks, {token_lines_sql("toks", _T21_LINE_TOKS)} AS ls
   FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM base)
 ),
 g4 AS (
@@ -2775,20 +2774,8 @@ s5 AS (
   WHERE canon_keep AND lang_ok AND q_ok AND rep_ok AND ent_ok
 ),
 sh5 AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN s5 USING (doc_id)),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh5 GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM sh5 a JOIN sh5 b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-nd_drop AS (
-  SELECT DISTINCT doc_b AS doc_id
-  FROM common
-  JOIN sizes sa ON sa.doc_id = doc_a
-  JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common)
-        >= {_P26_ND_THRESHOLD}
-),
+{jaccard_pair_ctes("sh5", _P26_ND_THRESHOLD)},
+nd_drop AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),
 s7 AS (
   SELECT * FROM s5
   WHERE doc_id NOT IN (SELECT doc_id FROM nd_drop)

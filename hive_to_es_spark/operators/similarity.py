@@ -179,16 +179,40 @@ def s3_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def sign_bucket(embedding: str | Column, bits: int = 8) -> Column:
+    """Deterministic sign-bit LSH bucket id: bit j is set iff component
+    j of the vector is > 0 (axis-aligned random-hyperplane sketch).
+    Engine-portable — SIGN_BUCKET_SQL is its DuckDB twin (bits=8) —
+    and the shared blocking key for s4 (query-vs-corpus ANN) and d6
+    (all-pairs near-dup)."""
+    c = F.col(embedding) if isinstance(embedding, str) else embedding
+    powers = F.array(*[F.lit(1 << j) for j in range(bits)])
+    return F.aggregate(
+        F.zip_with(
+            F.slice(c, 1, bits),
+            powers,
+            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+
+
+# DuckDB twin of sign_bucket(embedding) at bits=8: out-of-range
+# indexing reads NULL, which is not > 0, like Spark's zip_with padding.
+SIGN_BUCKET_SQL = """CAST(list_aggregate(
+           list_transform(range(1, 9),
+             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
+           'sum') AS INTEGER)"""
+
+
 # Sign-bit LSH: bucket id = 8 sign bits of the first 8 components (a
 # fixed random-hyperplane sketch with axis-aligned planes — fully
 # deterministic and engine-portable).
-_S4_ORACLE = """
+_S4_ORACLE = f"""
 WITH bucketed AS (
   SELECT vec_id, embedding,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket
+         {SIGN_BUCKET_SQL} AS bucket
   FROM embeddings
 ),
 q AS (
@@ -204,25 +228,6 @@ WHERE bucket = q.qbucket
 ORDER BY cos_sim DESC, vec_id ASC
 LIMIT 5
 """
-
-
-def sign_bucket(embedding: str | Column, bits: int = 8) -> Column:
-    """Deterministic sign-bit LSH bucket id: bit j is set iff component
-    j of the vector is > 0 (axis-aligned random-hyperplane sketch).
-    Engine-portable — the identical expression exists in the DuckDB
-    oracles — and the shared blocking key for s4 (query-vs-corpus ANN)
-    and d6 (all-pairs near-dup)."""
-    c = F.col(embedding) if isinstance(embedding, str) else embedding
-    powers = F.array(*[F.lit(1 << j) for j in range(bits)])
-    return F.aggregate(
-        F.zip_with(
-            F.slice(c, 1, bits),
-            powers,
-            lambda x, p: F.when(x > 0, p).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
 
 
 @register("s4_ann_lsh", _S4_ORACLE)
@@ -260,13 +265,10 @@ def s4_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-probe companion to s4: probe the query's bucket PLUS all 8
 # Hamming-distance-1 buckets. xor(bucket, qbucket) IN (1,2,4,...,128)
 # is the distance-1 test in both engines.
-_S10_ORACLE = """
+_S10_ORACLE = f"""
 WITH bucketed AS (
   SELECT vec_id, embedding,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket
+         {SIGN_BUCKET_SQL} AS bucket
   FROM embeddings
 ),
 q AS (
@@ -382,19 +384,55 @@ def ann_recall(
     return hits / total if total else 0.0
 
 
+def _centroids(df: DataFrame, group_cols: list[str], vec_col: str = "evec") -> DataFrame:
+    """Per-group dimension-mean centroids (group_cols..., cvec) via
+    the s3 posexplode shape — the ONE centroid aggregation for the IVF
+    family (codebook build per label, s19's subcentroids per
+    (cell, epoch side))."""
+    comp = (
+        df.select(*group_cols, F.posexplode(F.col(vec_col)).alias("pos0", "v"))
+        .groupBy(*group_cols, "pos0")
+        .agg(F.avg("v").alias("cv"))
+    )
+    return comp.groupBy(*group_cols).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda x: x.cv
+        ).alias("cvec")
+    )
+
+
+def _ivf_codebook(e: DataFrame) -> DataFrame:
+    """Per-label centroid codebook (c_label, cvec) — the trainable
+    (and, for s16, the PERSISTABLE) artifact of the IVF family."""
+    return _centroids(
+        e.select("label", _dbl("embedding").alias("evec")), ["label"]
+    ).select(F.col("label").alias("c_label"), "cvec")
+
+
+def centroids_sql(source: str, keys: str, component: str) -> str:
+    """DuckDB twin of _centroids: one row per `keys` group of the
+    relation `source` with cvec, the means of `component` (an
+    expression in the dimension index j) over the 64 dimensions."""
+    return f"""SELECT {keys}, list(cv ORDER BY j) AS cvec FROM (
+    SELECT {keys}, j, avg({component}) AS cv
+    FROM {source} CROSS JOIN generate_series(1, 64) t(j)
+    GROUP BY {keys}, j
+  ) GROUP BY {keys}"""
+
+
+def ivf_codebook_sql(source: str, component: str) -> str:
+    """DuckDB twin of _ivf_codebook over the relation `source`."""
+    return f"SELECT label AS c_label, cvec FROM ({centroids_sql(source, 'label', component)})"
+
+
 # IVF companion to s4's LSH: the coarse quantizer is the per-label
 # centroid codebook (10 centroids, computed in-query — production would
 # train k-means once and broadcast the codebook table). Assignment =
 # nearest centroid by Euclidean distance with a label tiebreak
 # (row_number, not arg_min: DuckDB's arg_min cannot order by tuples).
-_S5_ORACLE = """
-WITH comp AS (
-  SELECT label, j, avg(CAST(embedding[j] AS DOUBLE)) AS cv
-  FROM embeddings CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
+_S5_ORACLE = f"""
+WITH codebook AS (
+  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,
@@ -421,31 +459,6 @@ WHERE a.bucket = q.qbucket
 ORDER BY cos_sim DESC, e.vec_id ASC
 LIMIT 5
 """
-
-
-def _centroids(df: DataFrame, group_cols: list[str], vec_col: str = "evec") -> DataFrame:
-    """Per-group dimension-mean centroids (group_cols..., cvec) via
-    the s3 posexplode shape — the ONE centroid aggregation for the IVF
-    family (codebook build per label, s19's subcentroids per
-    (cell, epoch side))."""
-    comp = (
-        df.select(*group_cols, F.posexplode(F.col(vec_col)).alias("pos0", "v"))
-        .groupBy(*group_cols, "pos0")
-        .agg(F.avg("v").alias("cv"))
-    )
-    return comp.groupBy(*group_cols).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda x: x.cv
-        ).alias("cvec")
-    )
-
-
-def _ivf_codebook(e: DataFrame) -> DataFrame:
-    """Per-label centroid codebook (c_label, cvec) — the trainable
-    (and, for s16, the PERSISTABLE) artifact of the IVF family."""
-    return _centroids(
-        e.select("label", _dbl("embedding").alias("evec")), ["label"]
-    ).select(F.col("label").alias("c_label"), "cvec")
 
 
 def _ivf_serve(
@@ -583,14 +596,9 @@ def s5_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # nprobe=2 companion: identical CTEs, only the q cell filter widens.
-_S11_ORACLE = """
-WITH comp AS (
-  SELECT label, j, avg(CAST(embedding[j] AS DOUBLE)) AS cv
-  FROM embeddings CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
+_S11_ORACLE = f"""
+WITH codebook AS (
+  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,
@@ -824,13 +832,10 @@ def s8_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics with s4/d6's label-free bucket as the block key — the
 # all-pairs serving shape an UNLABELED corpus actually runs (d6 is
 # the threshold form; this is the top-k form).
-_S9_ORACLE = """
+_S9_ORACLE = f"""
 WITH bucketed AS (
   SELECT vec_id,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket,
+         {SIGN_BUCKET_SQL} AS bucket,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings
 ),
@@ -944,10 +949,7 @@ _S12_ORACLE = f"""
 WITH b AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev,
-         CAST(list_aggregate(
-           list_transform(range(1, 9),
-             j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER) AS bucket
+         {SIGN_BUCKET_SQL} AS bucket
   FROM embeddings
 ),
 q AS (
@@ -1531,7 +1533,7 @@ def _ivf_build_index(
     return cb_path, inv_path
 
 
-_S16_ORACLE = """
+_S16_ORACLE = f"""
 WITH c AS (
   SELECT vec_id, label,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
@@ -1542,14 +1544,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-comp AS (
-  SELECT label, j, avg(ev[j]) AS cv
-  FROM c CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
-),
+codebook AS ({ivf_codebook_sql("c", "ev[j]")}),
 assigned AS (
   SELECT vec_id, c_label AS bucket FROM (
     SELECT c.vec_id, cb.c_label,
@@ -1758,7 +1753,7 @@ _S18_GROWTH_PPM = 280_000  # re-cluster trigger: cell grew >= 28% since
 # build — between the fixture's per-cell growth extremes (~12%..37%)
 # at BOTH SFs, so flagged and unflagged cells both exist (pinned)
 
-_S18_ORACLE = """
+_S18_ORACLE = f"""
 WITH base AS (
   SELECT vec_id, label,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
@@ -1774,14 +1769,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-comp AS (
-  SELECT label, j, avg(ev[j]) AS cv
-  FROM base CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
-),
+codebook AS ({ivf_codebook_sql("base", "ev[j]")}),
 assigned AS (
   SELECT vec_id, c_label AS bucket FROM (
     SELECT corpus.vec_id, cb.c_label,
@@ -1939,7 +1927,7 @@ def s18_ivf_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # split index (nprobe=2, top-3).
 _S19_GROWTH_PPM = 280_000  # same trigger as s18's drift report
 
-_S19_ORACLE = """
+_S19_ORACLE = f"""
 WITH base AS (
   SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings WHERE vec_id % 50 <> 0 AND vec_id % 5 <> 4
@@ -1954,13 +1942,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-comp AS (
-  SELECT label, j, avg(ev[j]) AS cv
-  FROM base CROSS JOIN generate_series(1, 64) t(j) GROUP BY label, j
-),
-codebook AS (
-  SELECT label AS c_label, list(cv ORDER BY j) AS cvec FROM comp GROUP BY label
-),
+codebook AS ({ivf_codebook_sql("base", "ev[j]")}),
 assigned AS (
   SELECT vec_id, is_delta, ev, c_label AS cell FROM (
     SELECT corpus.*, cb.c_label,
@@ -1976,16 +1958,12 @@ occ AS (
   FROM assigned GROUP BY cell
 ),
 flagged AS (SELECT cell FROM occ WHERE (delta_n * 1000000) // greatest(built_n, 1) >= 280000),
-sub_comp AS (
-  SELECT a.cell, a.is_delta, j, avg(ev[j]) AS cv
-  FROM assigned a JOIN flagged f ON a.cell = f.cell
-  CROSS JOIN generate_series(1, 64) t(j)
-  GROUP BY a.cell, a.is_delta, j
+sub_in AS (
+  SELECT a.cell, a.is_delta, a.ev FROM assigned a JOIN flagged f ON a.cell = f.cell
 ),
 sub_cb AS (
-  SELECT 2 * cell + CASE WHEN is_delta THEN 1 ELSE 0 END AS c_label,
-         list(cv ORDER BY j) AS cvec
-  FROM sub_comp GROUP BY cell, is_delta
+  SELECT 2 * cell + CASE WHEN is_delta THEN 1 ELSE 0 END AS c_label, cvec
+  FROM ({centroids_sql("sub_in", "cell, is_delta", "ev[j]")})
 ),
 keep_cb AS (
   SELECT 2 * c_label AS c_label, cvec FROM codebook

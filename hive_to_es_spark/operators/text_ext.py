@@ -618,41 +618,6 @@ def t12_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _T13_LINE_TOKS = 3  # synthetic "line" = 3-token chunk (docs have no \n)
 _T13_DF_MIN = 3  # a line present in >= 3 distinct docs is boilerplate
 
-# NOTE: the line ladder derives from scalar range(1, nl+1) — a LIST in
-# DuckDB — zipped positionally by parallel unnest, so the oracle is
-# unbounded exactly like the Spark side's transform-over-sequence (a
-# fixed numbers table would silently truncate long documents).
-_T13_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk,
-         (len(string_split(text, ' ')) + {_T13_LINE_TOKS - 1}) // {_T13_LINE_TOKS}
-           AS nl
-  FROM documents
-),
-lines AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, nl + 1)) AS BIGINT) AS line_no,
-         unnest(list_transform(range(1, nl + 1),
-           i -> array_to_string(tk[(i - 1) * {_T13_LINE_TOKS} + 1
-                                   : i * {_T13_LINE_TOKS}], ' '))) AS line
-  FROM toks
-),
-freq AS (SELECT line, count(DISTINCT doc_id) AS df FROM lines GROUP BY line),
-flagged AS (
-  SELECT l.doc_id, l.line_no, l.line, f.df >= {_T13_DF_MIN} AS dropped
-  FROM lines l JOIN freq f USING (line)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(count(*) FILTER (WHERE dropped) AS BIGINT) AS n_dropped,
-       coalesce(
-         string_agg(line, ' ' ORDER BY line_no) FILTER (WHERE NOT dropped), ''
-       ) AS cleaned_text
-FROM flagged
-GROUP BY doc_id
-"""
-
-
 def token_lines(line_toks: int):
     """Synthetic "lines": the consecutive `line_toks`-token chunks of
     the `_toks` column (fixture docs carry no newlines; on real
@@ -672,6 +637,15 @@ def token_lines(line_toks: int):
     )
 
 
+def token_lines_sql(toks: str, line_toks: int) -> str:
+    """DuckDB twin of token_lines over the token-list column `toks`.
+    The line ladder is a range() LIST, so the chunker is unbounded
+    exactly like the Spark side's transform-over-sequence (a fixed
+    numbers table would silently truncate long documents)."""
+    return f"""list_transform(range(1, (len({toks}) + {line_toks - 1}) // {line_toks} + 1),
+           i -> array_to_string({toks}[(i - 1) * {line_toks} + 1 : i * {line_toks}], ' '))"""
+
+
 def _numbered_lines(
     docs: DataFrame, line_toks: int, no_col: str, line_col: str
 ) -> DataFrame:
@@ -682,6 +656,36 @@ def _numbered_lines(
         .select("doc_id", F.posexplode(token_lines(line_toks)).alias("pos", line_col))
         .select("doc_id", (F.col("pos") + 1).alias(no_col), line_col)
     )
+
+
+def numbered_lines_sql(source: str, line_toks: int, no_col: str, line_col: str) -> str:
+    """DuckDB twin of _numbered_lines over the relation `source`: the
+    line numbers and the lines are zipped positionally by parallel
+    unnest."""
+    return f"""SELECT doc_id, CAST(unnest(range(1, len(ls) + 1)) AS BIGINT) AS {no_col},
+         unnest(ls) AS {line_col}
+  FROM (SELECT doc_id, {token_lines_sql("tk", line_toks)} AS ls
+        FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM {source}))"""
+
+
+_T13_ORACLE = f"""
+WITH lines AS (
+  {numbered_lines_sql("documents", _T13_LINE_TOKS, "line_no", "line")}
+),
+freq AS (SELECT line, count(DISTINCT doc_id) AS df FROM lines GROUP BY line),
+flagged AS (
+  SELECT l.doc_id, l.line_no, l.line, f.df >= {_T13_DF_MIN} AS dropped
+  FROM lines l JOIN freq f USING (line)
+)
+SELECT doc_id,
+       CAST(count(*) AS BIGINT) AS n_lines,
+       CAST(count(*) FILTER (WHERE dropped) AS BIGINT) AS n_dropped,
+       coalesce(
+         string_agg(line, ' ' ORDER BY line_no) FILTER (WHERE NOT dropped), ''
+       ) AS cleaned_text
+FROM flagged
+GROUP BY doc_id
+"""
 
 
 def _reassemble(
@@ -776,19 +780,8 @@ def t13_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the df of the most-duplicated paragraph — salt-and-two-phase it if
 # a profiler flags one (j12's recipe).
 _D20_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk,
-         (len(string_split(text, ' ')) + {_T13_LINE_TOKS - 1}) // {_T13_LINE_TOKS}
-           AS nl
-  FROM documents
-),
-paras AS (
-  SELECT doc_id,
-         CAST(unnest(range(1, nl + 1)) AS BIGINT) AS para_no,
-         unnest(list_transform(range(1, nl + 1),
-           i -> array_to_string(tk[(i - 1) * {_T13_LINE_TOKS} + 1
-                                   : i * {_T13_LINE_TOKS}], ' '))) AS para
-  FROM toks
+WITH paras AS (
+  {numbered_lines_sql("documents", _T13_LINE_TOKS, "para_no", "para")}
 ),
 ranked AS (
   SELECT doc_id, para_no, para,
@@ -1883,11 +1876,7 @@ WITH t AS (
   WHERE text IS NOT NULL
 ),
 l0 AS (
-  SELECT doc_id,
-         list_transform(range(1, (len(w) + {_T21_LINE_TOKS - 1}) // {_T21_LINE_TOKS} + 1),
-           i -> array_to_string(
-                  list_slice(w, (i-1)*{_T21_LINE_TOKS} + 1, i*{_T21_LINE_TOKS}), ' ')
-         ) AS ls
+  SELECT doc_id, {token_lines_sql("w", _T21_LINE_TOKS)} AS ls
   FROM t
 ),
 dec AS (

@@ -1503,8 +1503,8 @@ def w20_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # The oracle reuses w20's sessionize/boundary/running-sum CTE chain
-# verbatim (string-sliced, the d14 discipline — the contracts cannot
-# drift), then adds the day census + carry/gap-fill layer.
+# verbatim (string-sliced, so the contracts cannot drift), then adds
+# the day census + carry/gap-fill layer.
 _W21_ORACLE = _W20_ORACLE[: _W20_ORACLE.index("SELECT CAST(tus //")].rstrip() + f""",
 rd AS (
   SELECT tus, delta, user_id, conc,
