@@ -44,7 +44,6 @@ import base64
 import datetime
 import decimal
 import json
-import re
 import time
 
 from py4j.protocol import Py4JJavaError
@@ -193,19 +192,12 @@ def _post_bulk(
 # the status store misses a job or task end (its listener queue drops
 # events when full), bulk_index re-raises at the deadline anyway.
 _AWAIT_MARGIN_S = 10.0
-_TIME_UNITS_S = {
-    "us": 1e-6, "ms": 1e-3, "s": 1.0, "m": 60.0, "min": 60.0, "h": 3600.0, "d": 86400.0
-}
-
-
 def _kill_timeout_s(sc) -> float:
     """spark.python.task.killTimeout in seconds: how long a cancelled
-    Python task may keep running before Spark kills its worker. The
-    conf is a Spark time string (a bare number is milliseconds)."""
-    raw = sc.getConf().get("spark.python.task.killTimeout", "2s").strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([a-z]*)", raw)
-    unit = _TIME_UNITS_S.get(m.group(2) or "ms") if m else None
-    return int(m.group(1)) * unit if unit else 2.0
+    Python task may keep running before Spark kills its worker. Read
+    with Spark's own time-string parser (a bare number is
+    milliseconds)."""
+    return sc._jsc.sc().conf().getTimeAsMs("spark.python.task.killTimeout", "2s") / 1000
 
 
 def _await_job_tasks(sc, group: str | None, known: set[int]) -> None:
