@@ -3,6 +3,8 @@ and consistently exposed through __spark_entry__."""
 
 from __future__ import annotations
 
+import duckdb
+
 import __spark_entry__ as entrypoint
 from hive_to_es_spark.registry import REGISTRY, oracles, queries
 
@@ -157,13 +159,21 @@ def test_bench_key_lists_name_registered_ops():
         assert not stale, f"scale_proof.{name} names unregistered keys: {sorted(stale)}"
 
 
-def test_oracle_coverage():
+def test_oracle_coverage(duck):
+    """Every non-rows-only key has an oracle, and every oracle
+    (deprecated ones too) binds against the fixture tables: parser,
+    catalog and binder errors raise here without running the query."""
     os_ = oracles()
     for key in EXPECTED_KEYS - ROWS_ONLY:
         assert key in os_, f"{key} should have a SQL oracle"
         assert "select" in os_[key].lower()
     for key in ROWS_ONLY:
         assert key not in os_, f"{key} is rows-only by design"
+    for key, sql in oracles(include_deprecated=True).items():
+        try:
+            duck.sql(sql).columns
+        except duckdb.Error as e:
+            raise AssertionError(f"{key}: oracle does not bind: {e}") from e
 
 
 def test_entrypoint_mirrors_registry():

@@ -157,6 +157,56 @@ def test_shingle_rows_match_shingle_sql(spark):
     assert got == want
 
 
+def test_token_lines_match_token_lines_sql(spark):
+    """The Spark line chunker and its DuckDB twin agree on NULL and
+    empty text, 1-4 and 7 tokens, and doubled spaces (empty tokens)."""
+    import duckdb
+
+    from hive_to_es_spark.operators.text_ext import token_lines, token_lines_sql
+
+    texts = [None, "", "a", "a b", "a b c", "a b c d", "a b c d e f g", "a  b c  d"]
+    rows = list(enumerate(texts))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(con.execute(
+        f"SELECT doc_id, {token_lines_sql('tk', 3)} FROM "
+        "(SELECT doc_id, string_split(text, ' ') AS tk FROM documents)"
+    ).fetchall())
+    docs = spark.createDataFrame(rows, "doc_id INT, text STRING")
+    got = sorted(map(tuple, docs.withColumn("_toks", F.split("text", " "))
+                     .select("doc_id", token_lines(3)).collect()))
+    assert got == want
+
+
+def test_sign_bucket_matches_sign_bucket_sql(spark):
+    """sign_bucket and SIGN_BUCKET_SQL agree on zeros, -0.0,
+    negatives and vectors shorter than the 8 sign bits."""
+    import duckdb
+
+    from hive_to_es_spark.operators.similarity import SIGN_BUCKET_SQL, sign_bucket
+
+    vecs = [
+        [0.0] * 8,
+        [-0.0] * 8,
+        [-1.0, 2.0, -3.0, 4.0, -5.0, 6.0, -7.0, 8.0, 9.0],
+        [1.0, -0.0, 0.0, 1e-9, -1e-9, 1.0, 1.0, 1.0],
+        [1.0, 1.0, 1.0],
+        [-1.0],
+        [],
+    ]
+    rows = list(enumerate(vecs))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id INTEGER, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = sorted(con.execute(
+        f"SELECT vec_id, {SIGN_BUCKET_SQL} FROM embeddings"
+    ).fetchall())
+    e = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
+    got = sorted(map(tuple, e.select("vec_id", sign_bucket("embedding")).collect()))
+    assert got == want
+
+
 def test_range_frame_includes_peers(spark):
     from pyspark.sql import Window
 
