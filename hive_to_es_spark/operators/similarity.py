@@ -200,10 +200,12 @@ def sign_bucket(embedding: str | Column, bits: int = 8) -> Column:
 
 # DuckDB twin of sign_bucket(embedding) at bits=8: out-of-range
 # indexing reads NULL, which is not > 0, like Spark's zip_with padding.
-SIGN_BUCKET_SQL = """CAST(list_aggregate(
+# A NULL vector has a NULL bucket in Spark; the range() ladder alone
+# would give it bucket 0.
+SIGN_BUCKET_SQL = """CASE WHEN embedding IS NOT NULL THEN CAST(list_aggregate(
            list_transform(range(1, 9),
              j -> CASE WHEN embedding[j] > 0 THEN 2 ** (j - 1) ELSE 0 END),
-           'sum') AS INTEGER)"""
+           'sum') AS INTEGER) END"""
 
 
 # Sign-bit LSH: bucket id = 8 sign bits of the first 8 components (a

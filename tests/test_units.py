@@ -181,7 +181,7 @@ def test_token_lines_match_token_lines_sql(spark):
 
 def test_sign_bucket_matches_sign_bucket_sql(spark):
     """sign_bucket and SIGN_BUCKET_SQL agree on zeros, -0.0,
-    negatives and vectors shorter than the 8 sign bits."""
+    negatives, vectors shorter than the 8 sign bits and NULL."""
     import duckdb
 
     from hive_to_es_spark.operators.similarity import SIGN_BUCKET_SQL, sign_bucket
@@ -194,6 +194,7 @@ def test_sign_bucket_matches_sign_bucket_sql(spark):
         [1.0, 1.0, 1.0],
         [-1.0],
         [],
+        None,
     ]
     rows = list(enumerate(vecs))
     con = duckdb.connect()
