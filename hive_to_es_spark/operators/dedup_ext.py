@@ -155,11 +155,11 @@ def capped_shingles(
     )
 
 
-def capped_shingle_sql(df_cap: int, source: str = "documents") -> str:
-    """DuckDB twin of capped_shingles over the relation `source`: the
-    hot-shingle cap as a QUALIFY window, the same rows as the Spark
-    side's aggregate + anti join."""
-    return f"""SELECT doc_id, shingle FROM ({shingle_sql(source)})
+def capped_shingle_sql(df_cap: int) -> str:
+    """DuckDB twin of capped_shingles over `documents`: the hot-shingle
+    cap as a QUALIFY window, the same rows as the Spark side's
+    aggregate + anti join."""
+    return f"""SELECT doc_id, shingle FROM ({shingle_sql()})
   QUALIFY count(*) OVER (PARTITION BY shingle) <= {df_cap}"""
 
 

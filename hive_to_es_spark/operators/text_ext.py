@@ -658,19 +658,19 @@ def _numbered_lines(
     )
 
 
-def numbered_lines_sql(source: str, line_toks: int, no_col: str, line_col: str) -> str:
-    """DuckDB twin of _numbered_lines over the relation `source`: the
-    line numbers and the lines are zipped positionally by parallel
+def numbered_lines_sql(line_toks: int, no_col: str, line_col: str) -> str:
+    """DuckDB twin of _numbered_lines over `documents`: the line
+    numbers and the lines are zipped positionally by parallel
     unnest."""
     return f"""SELECT doc_id, CAST(unnest(range(1, len(ls) + 1)) AS BIGINT) AS {no_col},
          unnest(ls) AS {line_col}
   FROM (SELECT doc_id, {token_lines_sql("tk", line_toks)} AS ls
-        FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM {source}))"""
+        FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM documents))"""
 
 
 _T13_ORACLE = f"""
 WITH lines AS (
-  {numbered_lines_sql("documents", _T13_LINE_TOKS, "line_no", "line")}
+  {numbered_lines_sql(_T13_LINE_TOKS, "line_no", "line")}
 ),
 freq AS (SELECT line, count(DISTINCT doc_id) AS df FROM lines GROUP BY line),
 flagged AS (
@@ -781,7 +781,7 @@ def t13_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a profiler flags one (j12's recipe).
 _D20_ORACLE = f"""
 WITH paras AS (
-  {numbered_lines_sql("documents", _T13_LINE_TOKS, "para_no", "para")}
+  {numbered_lines_sql(_T13_LINE_TOKS, "para_no", "para")}
 ),
 ranked AS (
   SELECT doc_id, para_no, para,
