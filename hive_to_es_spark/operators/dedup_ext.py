@@ -1222,10 +1222,9 @@ _D14_ORACLE = f"""
 WITH RECURSIVE sh AS ({shingle_sql()}),
 {jaccard_pair_ctes("sh", 0.2)},
 {components_ctes("documents", "doc_id", "pairs", "doc_a", "doc_b")},
-comp AS (SELECT id AS doc_id, component AS group_id FROM components),
 scored AS (
-  SELECT c.doc_id, c.group_id, d.n_chars
-  FROM comp c JOIN documents d USING (doc_id)
+  SELECT c.id AS doc_id, c.component AS group_id, d.n_chars
+  FROM components c JOIN documents d ON d.doc_id = c.id
 ),
 canon AS (
   SELECT group_id, doc_id AS canonical_id FROM (
