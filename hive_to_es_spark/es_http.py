@@ -192,6 +192,8 @@ def _post_bulk(
 # the status store misses a job or task end (its listener queue drops
 # events when full), bulk_index re-raises at the deadline anyway.
 _AWAIT_MARGIN_S = 10.0
+
+
 def _kill_timeout_s(sc) -> float:
     """spark.python.task.killTimeout in seconds: how long a cancelled
     Python task may keep running before Spark kills its worker. Read
