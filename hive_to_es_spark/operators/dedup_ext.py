@@ -1565,7 +1565,7 @@ _D17_TAU = 0.3
 
 _D17_ORACLE = f"""
 WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
+  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from hive_to_es_spark.functions.money import sum_cents
 from hive_to_es_spark.io import load_tables
+from hive_to_es_spark.operators.windows import ranged_running_sum
 from hive_to_es_spark.pipeline import TMP_ROOT, Job, run_job, run_jobs
 from hive_to_es_spark.registry import register
 
@@ -139,14 +140,8 @@ def p5_type_to_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Batching semantics as explicit page assignment. The oracle states
 # the semantics with a global row_number; the Spark plan must NOT run
 # one (an unpartitioned window moves the whole table through a single
-# task — a hard 100 TB scale-killer). Instead: two-pass
-# partition-offset assignment. Pass 1 range-partitions by key and
-# collects per-partition row counts (one row per partition — same
-# O(n_partitions) driver state as a shuffle's map-status); pass 2
-# assigns row_number WITHIN each range partition and adds the
-# partition's broadcast cumulative offset. Output is identical to the
-# global window because range partition i holds exactly the keys
-# ranked between offset[i] and offset[i]+count[i].
+# task — a hard 100 TB scale-killer). The global rank is
+# ranged_running_sum over a constant 1 instead.
 _P6_ORACLE = """
 SELECT batch_id, count(*) AS n_rows, min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
 FROM (
@@ -163,63 +158,23 @@ def page_assign(keys: DataFrame, key_col: str, page_size: int, n_parts: int) -> 
     with per-batch bounds — bounded sink memory made visible.
     Returns (batch_id, n_rows, min_key, max_key).
 
-    Scale shape: no global window, and no reliance on physical
-    placement: the range partition is COMPUTED from the key
-    (fixed-width key ranges off a min/max scan), so every pass derives
-    identical assignments with nothing persisted. An earlier version
-    used repartitionByRange + spark_partition_id and persisted the
-    frame to keep the two passes consistent — RangePartitioner's
-    sample seed incorporates the RDD id, so an unpersisted recompute
-    re-draws DIFFERENT boundaries (observed: the oracle caught a
-    16-vs-15-batch drift the moment the persist was dropped).
-    Arithmetic ranges make determinism a property of the DATA, not of
-    cache residency; the cost is balance under key skew, which for a
-    dense surrogate key is moot. Driver state: min/max (2 values) +
-    one count per range (n_partitions rows — same O(n_partitions) as a
-    shuffle's map statuses). The within-range window shuffles by _pid
-    only — every group is ~n/n_parts rows.
+    Scale shape: each key's 1-based global rank is ranged_running_sum
+    of 1 over `n_parts` key ranges — no global window, nothing
+    persisted, identical under recompute.
     """
-    keys = keys.select(key_col)
-    lo, hi = keys.agg(F.min(key_col), F.max(key_col)).first()
-    if lo is None:  # empty source: zero batches, not a TypeError below
-        return keys.select(
-            F.col(key_col).alias("batch_id"),
-            F.lit(0).cast("bigint").alias("n_rows"),
-            F.col(key_col).alias("min_key"),
-            F.col(key_col).alias("max_key"),
-        ).limit(0)
-    width = max(1, -(-(hi - lo + 1) // n_parts))  # ceil-div
-    ranged = keys.withColumn(
-        "_pid", F.floor((F.col(key_col) - F.lit(lo)) / F.lit(width)).cast("int")
-    )
-    counts = sorted(
-        (r["_pid"], r["_n"])
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
-    )
-    offset_entries: list = []
-    acc = 0
-    for pid, n in counts:
-        offset_entries += [F.lit(pid), F.lit(acc)]
-        acc += n
-    offset = F.element_at(F.create_map(*offset_entries), F.col("_pid"))
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    global_rn = F.row_number().over(w) + offset - 1  # 0-based global rank
-    batch = F.floor(global_rn / page_size).cast("bigint")
-    return (
-        ranged.select(key_col, batch.alias("batch_id"))
-        .groupBy("batch_id")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min(key_col).alias("min_key"),
-            F.max(key_col).alias("max_key"),
-        )
+    ranked = ranged_running_sum(keys.select(key_col), F.lit(1), [key_col], n_parts)
+    batch = F.expr(f"(_cum - 1) div {page_size}").cast("bigint")
+    return ranked.groupBy(batch.alias("batch_id")).agg(
+        F.count("*").alias("n_rows"),
+        F.min(key_col).alias("min_key"),
+        F.max(key_col).alias("max_key"),
     )
 
 
 @register("p6_batching", _P6_ORACLE)
 def p6_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1000-row page assignment over orders — see page_assign for the
-    two-pass arithmetic-range plan and its determinism story."""
+    plan and ranged_running_sum for its determinism story."""
     o = load_tables(spark, sf_dir).orders
     return page_assign(o, "o_orderkey", 1000, spark.sparkContext.defaultParallelism)
 
@@ -234,25 +189,10 @@ def shard_assign(
     than the budget get a shard of their own). This is page_assign
     with a WEIGHT instead of a row count — the training-data form:
     token-budgeted shards for sequence packing, size-budgeted tars for
-    WebDataset-style exports.
-
-    Same scale shape as page_assign: the global cumulative weight is
-    two-pass — arithmetic key ranges off a min/max scan, per-range
-    weight totals collected (n_parts rows of driver state), offsets
-    broadcast back, running sum windowed WITHIN each range only. No
-    global window, nothing persisted, deterministic under recompute.
-    Returns (shard_id, n_docs, total_weight, min_key, max_key).
+    WebDataset-style exports. The cumulative weight comes from
+    shard_assign_rows. Returns (shard_id, n_docs, total_weight,
+    min_key, max_key).
     """
-    base = df.select(key_col, F.col(weight_col).cast("long").alias("_w"))
-    lo, _ = base.agg(F.min(key_col), F.max(key_col)).first()
-    if lo is None:
-        return base.select(
-            F.col(key_col).alias("shard_id"),
-            F.lit(0).cast("bigint").alias("n_docs"),
-            F.lit(0).cast("bigint").alias("total_weight"),
-            F.col(key_col).alias("min_key"),
-            F.col(key_col).alias("max_key"),
-        ).limit(0)
     return (
         shard_assign_rows(df, key_col, weight_col, budget, n_parts)
         .select(key_col, F.col(weight_col).cast("long").alias("_w"), "shard_id")
@@ -271,37 +211,15 @@ def shard_assign_rows(
 ) -> DataFrame:
     """The PER-ROW form of shard_assign (factored out in round 14 so
     p27 can export the actual shard contents): every input row plus
-    its `shard_id` under the same greedy start-offset packing and the
-    same two-pass no-global-window plan. Input must be non-empty
-    (shard_assign guards the empty case; an exporter with zero rows
-    has nothing to write)."""
-    lo, hi = df.agg(F.min(key_col), F.max(key_col)).first()
-    width = max(1, -(-(hi - lo + 1) // n_parts))  # ceil-div
-    ranged = df.withColumn(
-        "_srw", F.col(weight_col).cast("long")
-    ).withColumn(
-        "_pid", F.floor((F.col(key_col) - F.lit(lo)) / F.lit(width)).cast("int")
-    )
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in ranged.groupBy("_pid").agg(F.sum("_srw").alias("_t")).collect()
-    )
-    offset_entries: list = []
-    acc = 0
-    for pid, t in totals:
-        offset_entries += [F.lit(pid), F.lit(acc)]
-        acc += t
-    offset = F.element_at(F.create_map(*offset_entries), F.col("_pid"))
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    # global cumulative weight INCLUSIVE of this row; start offset =
-    # cum - w. Integer div keeps both engines exact (no FP floor).
-    cum = F.sum("_srw").over(w) + offset
+    its `shard_id` under the same greedy start-offset packing. The
+    global cumulative weight is ranged_running_sum over `n_parts` key
+    ranges — no global window."""
+    weighted = df.withColumn("_srw", F.col(weight_col).cast("long"))
+    ranked = ranged_running_sum(weighted, "_srw", [key_col], n_parts)
+    # _cum counts this row, so its start offset is _cum - _srw.
+    # Integer div keeps both engines exact (no FP floor).
     shard = F.expr(f"(_cum - _srw) div {budget}").cast("bigint")
-    return (
-        ranged.withColumn("_cum", cum)
-        .withColumn("shard_id", shard)
-        .drop("_srw", "_pid", "_cum")
-    )
+    return ranked.withColumn("shard_id", shard).drop("_srw", "_cum")
 
 
 # Token-budget sharding semantics stated as a global running sum; the

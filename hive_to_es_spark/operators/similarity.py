@@ -155,10 +155,11 @@ def s2_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _S3_ORACLE = """
-SELECT label, j AS pos,
-       round(avg(CAST(embedding[j] AS DOUBLE)), 6) AS centroid_val
-FROM embeddings
-CROSS JOIN generate_series(1, 64) t(j)
+SELECT label, j AS pos, round(avg(CAST(v AS DOUBLE)), 6) AS centroid_val
+FROM (
+  SELECT label, unnest(embedding) AS v, generate_subscripts(embedding, 1) AS j
+  FROM embeddings
+)
 GROUP BY label, j
 """
 
@@ -411,20 +412,22 @@ def _ivf_codebook(e: DataFrame) -> DataFrame:
     ).select(F.col("label").alias("c_label"), "cvec")
 
 
-def centroids_sql(source: str, keys: str, component: str) -> str:
+def centroids_sql(source: str, keys: str, vec: str) -> str:
     """DuckDB twin of _centroids: one row per `keys` group of the
-    relation `source` with cvec, the means of `component` (an
-    expression in the dimension index j) over the 64 dimensions."""
+    relation `source` with cvec, the per-dimension means of the
+    DOUBLE list expression `vec`, over every dimension present. A
+    NULL vector unnests to no rows, as it posexplodes to none."""
     return f"""SELECT {keys}, list(cv ORDER BY j) AS cvec FROM (
-    SELECT {keys}, j, avg({component}) AS cv
-    FROM {source} CROSS JOIN generate_series(1, 64) t(j)
-    GROUP BY {keys}, j
+    SELECT {keys}, j, avg(v) AS cv FROM (
+      SELECT {keys}, unnest({vec}) AS v, generate_subscripts({vec}, 1) AS j
+      FROM {source}
+    ) GROUP BY {keys}, j
   ) GROUP BY {keys}"""
 
 
-def ivf_codebook_sql(source: str, component: str) -> str:
+def ivf_codebook_sql(source: str, vec: str) -> str:
     """DuckDB twin of _ivf_codebook over the relation `source`."""
-    return f"SELECT label AS c_label, cvec FROM ({centroids_sql(source, 'label', component)})"
+    return f"SELECT label AS c_label, cvec FROM ({centroids_sql(source, 'label', vec)})"
 
 
 # IVF companion to s4's LSH: the coarse quantizer is the per-label
@@ -434,7 +437,7 @@ def ivf_codebook_sql(source: str, component: str) -> str:
 # (row_number, not arg_min: DuckDB's arg_min cannot order by tuples).
 _S5_ORACLE = f"""
 WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
+  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,
@@ -600,7 +603,7 @@ def s5_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nprobe=2 companion: identical CTEs, only the q cell filter widens.
 _S11_ORACLE = f"""
 WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "CAST(embedding[j] AS DOUBLE)")}
+  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
 ),
 dists AS (
   SELECT e.vec_id, c.c_label,
@@ -1546,7 +1549,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-codebook AS ({ivf_codebook_sql("c", "ev[j]")}),
+codebook AS ({ivf_codebook_sql("c", "ev")}),
 assigned AS (
   SELECT vec_id, c_label AS bucket FROM (
     SELECT c.vec_id, cb.c_label,
@@ -1771,7 +1774,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-codebook AS ({ivf_codebook_sql("base", "ev[j]")}),
+codebook AS ({ivf_codebook_sql("base", "ev")}),
 assigned AS (
   SELECT vec_id, c_label AS bucket FROM (
     SELECT corpus.vec_id, cb.c_label,
@@ -1944,7 +1947,7 @@ q AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-codebook AS ({ivf_codebook_sql("base", "ev[j]")}),
+codebook AS ({ivf_codebook_sql("base", "ev")}),
 assigned AS (
   SELECT vec_id, is_delta, ev, c_label AS cell FROM (
     SELECT corpus.*, cb.c_label,
@@ -1965,7 +1968,7 @@ sub_in AS (
 ),
 sub_cb AS (
   SELECT 2 * cell + CASE WHEN is_delta THEN 1 ELSE 0 END AS c_label, cvec
-  FROM ({centroids_sql("sub_in", "cell, is_delta", "ev[j]")})
+  FROM ({centroids_sql("sub_in", "cell, is_delta", "ev")})
 ),
 keep_cb AS (
   SELECT 2 * c_label AS c_label, cvec FROM codebook

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_to_es_spark.io import load_tables
+from hive_to_es_spark.operators.windows import ranged_running_sum
 from hive_to_es_spark.registry import register
 
 _T1_ORACLE = """
@@ -727,17 +728,13 @@ def m9_multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence-packing a data loader performs, moved into the engine
     where it parallelizes and audits.
 
-    Plan: p6/p12's two-pass range-offset discipline — NO global
-    window. Pass 1 ranges the stream arithmetically on doc_id (every
-    doc's items land in one range, so the within-range (doc_id,
-    item_no) window gives the exact global running weight after the
-    per-range offsets — |ranges| rows of driver state — are added
-    back). The item explode is scan-side (transform + explode, no
-    UDF); the only shuffle is the range-window sort plus the final
-    |sequences|-key aggregate. At 100 TB: ranges come from the
-    min/max scan exactly like p12, and the 2^20 item_no headroom of a
-    synthetic single key is unnecessary because the range key is
-    doc_id itself."""
+    Plan: the global running weight is ranged_running_sum over
+    (doc_id, item_no) — NO global window. Its ranges key on doc_id,
+    so every doc's items land in one range and the 2^20 item_no
+    headroom of a synthetic single key is unnecessary. The item
+    explode is scan-side (transform + explode, no UDF); the only
+    shuffle is the range-window sort plus the final |sequences|-key
+    aggregate."""
     d = load_tables(spark, sf_dir).documents
     img = d.select(
         "doc_id",
@@ -766,26 +763,10 @@ def m9_multimodal_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("is_image"),
     )
     items = img.unionByName(chunks)
-    n_parts = spark.sparkContext.defaultParallelism
-    lo, hi = items.agg(F.min("doc_id"), F.max("doc_id")).first()
-    width = max(1, -(-(hi - lo + 1) // n_parts))  # ceil-div
-    ranged = items.withColumn(
-        "_pid", F.floor((F.col("doc_id") - F.lit(lo)) / F.lit(width)).cast("int")
-    )
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in ranged.groupBy("_pid").agg(F.sum("w").alias("_t")).collect()
-    )
-    offset_entries: list = []
-    acc = 0
-    for pid, t in totals:
-        offset_entries += [F.lit(pid), F.lit(acc)]
-        acc += t
-    offset = F.element_at(F.create_map(*offset_entries), F.col("_pid"))
-    win = Window.partitionBy("_pid").orderBy("doc_id", "item_no")
-    cum = F.sum("w").over(win) + offset
     return (
-        ranged.withColumn("_cum", cum)
+        ranged_running_sum(
+            items, "w", ["doc_id", "item_no"], spark.sparkContext.defaultParallelism
+        )
         .withColumn("seq_id", F.expr(f"(_cum - w) div {_M9_BUDGET}").cast("bigint"))
         .groupBy("seq_id")
         .agg(

@@ -17,7 +17,7 @@ Gotchas baked in (FIXTURES.md "Cross-engine gotchas"):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_to_es_spark.functions.money import cents
@@ -1289,32 +1289,67 @@ def w19_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ranged_running_sum(
+    df: DataFrame, value: str | Column, order: list, n_ranges: int
+) -> DataFrame:
+    """`df` plus `_cum`, the running sum of `value` over the total
+    order `order`, counting the row itself. `order[0]` names an
+    ascending integer column with no NULLs; later entries (names or
+    Columns) break its ties. Empty input gives an empty frame.
+
+    A global running window moves the whole table through one task,
+    so the sum runs in two passes instead. Pass 1 cuts the leading
+    key into `n_ranges` fixed-width ranges off one min/max scan and
+    collects one partial sum per range (|ranges| rows of driver
+    state, the same O(n_partitions) as a shuffle's map statuses);
+    their prefix sums are the carry-ins. Pass 2 runs a ROWS window
+    partitioned by the range id `_pid` and adds the row's carry-in.
+    Equal leading keys never split across ranges, so the result is
+    the global window's exactly.
+
+    The ranges are computed from the key, not drawn by
+    repartitionByRange: RangePartitioner's sample seed incorporates
+    the RDD id, so an unpersisted recompute re-draws DIFFERENT
+    boundaries (p6 once drifted from 16 to 15 batches the moment its
+    persist was dropped). Arithmetic ranges make both passes agree by
+    a property of the data, with nothing persisted; the cost is
+    balance under key skew, which for a dense surrogate key is moot."""
+    key = order[0]
+    lo, hi = df.agg(F.min(key), F.max(key)).first()
+    if lo is None:  # empty input: one empty range
+        lo = hi = 0
+    width = max(1, -(-(hi - lo + 1) // n_ranges))  # ceil-div
+    ranged = df.withColumn(
+        "_pid", F.expr(f"(`{key}` - ({lo})) div {width}").cast("int")
+    )
+    sums = ranged.groupBy("_pid").agg(F.sum(value)).collect()
+    entries: list = []
+    acc = 0
+    for pid, s in sorted(sums):
+        entries += [F.lit(pid), F.lit(acc)]
+        acc += s
+    carry = F.element_at(F.create_map(*entries), F.col("_pid")) if entries else F.lit(0)
+    w = Window.partitionBy("_pid").orderBy(*order).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return ranged.withColumn("_cum", F.sum(value).over(w) + carry).drop("_pid")
+
+
 # ---------------------------------------------------------------------------
 # w20: peak concurrent sessions per day — the interval-stabbing
 # maximum over w9's gap sessions. The textbook answer is a GLOBAL
 # running sum over a time-ordered +1/-1 boundary stream, which is a
 # single-task sort at any scale; this op computes the identical
-# values with p6's two-pass arithmetic-range discipline instead:
-#
-#   1. boundaries: each session emits (start, +1) and (end, -1) —
-#      2 rows per session, never per event.
-#   2. pass 1: arithmetic time ranges (fixed-width off one min/max
-#      scan — deterministic from the DATA, page_assign's rule), then
-#      one map-combined sum(delta) per range; the |ranges| partial
-#      sums collect to the driver (same O(n_partitions) state as a
-#      shuffle's map statuses) and prefix-sum into per-range carry-in
-#      offsets.
-#   3. pass 2: running sum WITHIN each range (+ broadcast carry-in)
-#      = the exact global concurrency at every boundary.
+# values from 2 boundary rows per session — (start, +1) and
+# (end, -1), never one per event — and ranged_running_sum over them.
 #
 # Boundary order is (tus ASC, delta DESC, user_id ASC): starts before
 # ends at the same instant (endpoint-inclusive overlap — also what
 # keeps a single-event session from dipping to -1), user_id as the
 # unique tiebreaker (one user cannot hold two boundaries at one tus:
-# w9 sessions of the same user are > 12 h apart). Equal-tus rows can
-# never split across ranges (ranges key on tus alone), so the
-# carry-in composition is exact. The day peak reads only +1 rows —
-# the running maximum is always attained immediately after a start.
+# w9 sessions of the same user are > 12 h apart). The day peak reads
+# only +1 rows — the running maximum is always attained immediately
+# after a start.
 # Day arithmetic stays in exact integers: (tus - tus % DAY) / DAY
 # with an evenly-divisible numerator (the b11/t20 exact-DIV trick).
 # ---------------------------------------------------------------------------
@@ -1360,14 +1395,12 @@ FROM r WHERE delta = 1 GROUP BY epoch_day
 """
 
 
-def boundary_concurrency(ev: DataFrame) -> DataFrame | None:
-    """Sessionize + boundary stream + two-pass carry-in running sum,
-    factored from w20 so w21 can reuse it: returns one row per session
+def boundary_concurrency(ev: DataFrame) -> DataFrame:
+    """Sessionize + boundary stream + ranged_running_sum, factored
+    from w20 so w21 can reuse it: returns one row per session
     BOUNDARY (user_id, tus, delta, conc) where conc is the exact
     global concurrency immediately after that boundary in
-    (tus ASC, delta DESC, user_id ASC) order; None on an empty source
-    (callers emit their own empty frame). See the block comment above
-    for why no global window appears."""
+    (tus ASC, delta DESC, user_id ASC) order."""
     w = Window.partitionBy("user_id").orderBy(F.col("tus").asc(), F.col("event_id").asc())
     gap = F.col("tus") - F.lag("tus").over(w)
     new_s = F.when(gap.isNull() | (gap > _W9_GAP_US), 1).otherwise(0)
@@ -1400,44 +1433,9 @@ def boundary_concurrency(ev: DataFrame) -> DataFrame | None:
             )
         ).alias("_e"),
     ).select("user_id", "_e.tus", "_e.delta")
-    lo, hi = bnd.agg(F.min("tus"), F.max("tus")).first()
-    if lo is None:  # empty source: zero days, not a TypeError below
-        return None
-    width = max(1, -(-(hi - lo + 1) // _W20_N_RANGES))  # ceil-div
-    ranged = bnd.withColumn(
-        "_pid", F.floor((F.col("tus") - F.lit(lo)) / F.lit(width)).cast("int")
-    )
-    # pass 1: per-range delta sums -> prefix carry-in offsets (bounded
-    # driver state: one row per range)
-    sums = sorted(
-        (r["_pid"], r["_s"])
-        for r in ranged.groupBy("_pid").agg(F.sum("delta").alias("_s")).collect()
-    )
-    offset_entries: list = []
-    acc = 0
-    for pid, s in sums:
-        offset_entries += [F.lit(pid), F.lit(acc)]
-        acc += s
-    carry = F.element_at(F.create_map(*offset_entries), F.col("_pid"))
-    # pass 2: within-range running sum + carry-in = global concurrency
-    w_run = Window.partitionBy("_pid").orderBy(
-        F.col("tus").asc(), F.col("delta").desc(), F.col("user_id").asc()
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return ranged.select(
-        "user_id",
-        "tus",
-        "delta",
-        (F.sum("delta").over(w_run) + carry).cast("bigint").alias("conc"),
-    )
-
-
-def _w20_empty(ev: DataFrame) -> DataFrame:
-    """Zero-day result frame with w20/w21's output schema."""
-    return ev.select(
-        F.lit(0).cast("bigint").alias("epoch_day"),
-        F.lit(0).cast("bigint").alias("peak_concurrency"),
-        F.lit(0).cast("bigint").alias("n_sessions_started"),
-    ).limit(0)
+    return ranged_running_sum(
+        bnd, "delta", ["tus", F.col("delta").desc(), "user_id"], _W20_N_RANGES
+    ).select("user_id", "tus", "delta", F.col("_cum").cast("bigint").alias("conc"))
 
 
 def peak_concurrency(ev: DataFrame) -> DataFrame:
@@ -1452,8 +1450,6 @@ def peak_concurrency(ev: DataFrame) -> DataFrame:
     active sessions but no starts emits no row. w21
     (peak_concurrency_daily) is the carried-in variant."""
     conc = boundary_concurrency(ev)
-    if conc is None:
-        return _w20_empty(ev)
     day = ((F.col("tus") - F.col("tus") % _W20_DAY_US) / _W20_DAY_US).cast("bigint")
     return (
         conc.filter(F.col("delta") == 1)
@@ -1469,9 +1465,9 @@ def peak_concurrency(ev: DataFrame) -> DataFrame:
 def w20_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent sessions per epoch day (w9's 12-h-gap sessions,
     endpoint-inclusive overlap) — the capacity-planning census. See
-    the block comment for the two-pass no-global-window plan; the
-    oracle restates it as the naive global running sum, so the hash
-    gate proves the carry-in composition exact."""
+    the block comment and ranged_running_sum for the plan; the oracle
+    restates it as the naive global running sum, so the hash gate
+    proves the carry-in composition exact."""
     return peak_concurrency(
         load_tables(spark, sf_dir)
         .events.filter(F.col("ts").isNotNull())
@@ -1543,8 +1539,6 @@ def peak_concurrency_daily(ev: DataFrame) -> DataFrame:
     carried-in per-day peak (see the block comment). Output schema is
     w20's: (epoch_day, peak_concurrency, n_sessions_started)."""
     conc = boundary_concurrency(ev)
-    if conc is None:
-        return _w20_empty(ev)
     day = ((F.col("tus") - F.col("tus") % _W20_DAY_US) / _W20_DAY_US).cast("bigint")
     # last boundary of the day in (tus ASC, delta DESC, user_id ASC)
     # order = max of (tus, -delta, user_id); unique per row (one user

@@ -208,6 +208,67 @@ def test_sign_bucket_matches_sign_bucket_sql(spark):
     assert got == want
 
 
+def test_centroids_match_centroids_sql(spark):
+    """_centroids and centroids_sql agree on vectors narrower (3) and
+    wider (70) than the fixtures' 64 dimensions, over two groups; a
+    NULL vector drops out of its group's means in both engines."""
+    import duckdb
+
+    from hive_to_es_spark.operators.similarity import _centroids, centroids_sql
+
+    wide = [float(i % 7 - 3) for i in range(70)]
+    rows = [
+        (0, 1, [1.0, 2.0, 3.0]),
+        (1, 1, [3.0, -2.0, 0.5]),
+        (2, 1, None),
+        (3, 2, wide),
+        (4, 2, [x / 2 for x in wide]),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE vecs (vec_id INTEGER, label INTEGER, evec DOUBLE[])")
+    con.executemany("INSERT INTO vecs VALUES (?, ?, ?)", rows)
+    want = sorted(con.execute(centroids_sql("vecs", "label", "evec")).fetchall())
+    v = spark.createDataFrame(rows, "vec_id INT, label INT, evec ARRAY<DOUBLE>")
+    got = sorted(map(tuple, _centroids(v, ["label"]).collect()))
+    assert got == want
+    assert [len(cvec) for _, cvec in got] == [3, 70]
+
+
+def test_ranged_running_sum_matches_global_window(spark):
+    """ranged_running_sum's _cum equals the global ROWS running window
+    it stands in for: on more splits than ranges, on key gaps that
+    leave whole ranges empty, on leading-key ties broken by a DESC
+    column (w20's boundary order), with a Column value, and on an
+    empty frame."""
+    from pyspark.sql import Window
+
+    from hive_to_es_spark.operators.windows import ranged_running_sum
+
+    def check(df, value, order, n_ranges):
+        w = Window.orderBy(*order).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        want = sorted(map(tuple, df.withColumn("_cum", F.sum(value).over(w)).collect()))
+        got = ranged_running_sum(df, value, order, n_ranges)
+        assert got.columns == df.columns + ["_cum"]
+        assert sorted(map(tuple, got.collect())) == want
+
+    dense = spark.createDataFrame(
+        [(k, k % 5 - 2) for k in range(-20, 20)], "k LONG, v LONG"
+    ).repartition(7)
+    check(dense, "v", ["k"], 3)
+    check(dense, F.lit(1), ["k"], 3)
+    # width ceil(101 / 8) = 13: ranges 1, 2, 4, 5 and 6 hold no key
+    gaps = spark.createDataFrame(
+        [(k, k + 1) for k in (0, 1, 2, 50, 51, 99, 100)], "k LONG, v LONG"
+    ).repartition(3)
+    check(gaps, "v", ["k"], 8)
+    bnd = [(0, 1, 1), (0, -1, 2), (0, 1, 3), (5, -1, 1), (5, 1, 4), (9, -1, 3), (9, -1, 4)]
+    ties = spark.createDataFrame(bnd, "tus LONG, delta INT, user_id LONG").repartition(5)
+    check(ties, "delta", ["tus", F.col("delta").desc(), "user_id"], 4)
+    check(spark.createDataFrame([], "k LONG, v LONG"), "v", ["k"], 4)
+
+
 def test_range_frame_includes_peers(spark):
     from pyspark.sql import Window
 
@@ -690,7 +751,7 @@ def test_shard_assign_packing_semantics(spark):
     shards exceed budget by at most one straddling doc, an oversized
     doc still lands in exactly one shard, empty input yields zero
     shards, and every doc is assigned exactly once."""
-    from hive_to_es_spark.operators.pipeline_ops import shard_assign
+    from hive_to_es_spark.operators.pipeline_ops import shard_assign, shard_assign_rows
 
     rows = [(1, 40), (2, 40), (3, 40), (4, 250), (5, 10), (6, 10)]
     df = spark.createDataFrame(rows, "k LONG, w LONG")
@@ -705,6 +766,9 @@ def test_shard_assign_packing_semantics(spark):
 
     empty = spark.createDataFrame([], "k LONG, w LONG")
     assert shard_assign(empty, "k", "w", 100, 4).count() == 0
+    empty_rows = shard_assign_rows(empty, "k", "w", 100, 4)
+    assert empty_rows.columns == ["k", "w", "shard_id"]
+    assert empty_rows.count() == 0
 
 
 def test_sketch_accuracy_error_bound(spark, sf_dir):
@@ -2679,6 +2743,13 @@ def test_peak_concurrency_edge_geometries(spark):
     #   peak 2, starts 2.
     # day 2: u1's last zero-length session -> +1 then -1: peak 1.
     assert got == {0: (2, 3), 1: (2, 2), 2: (1, 1)}, got
+    empty = peak_concurrency(df.limit(0))
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("epoch_day", "bigint"),
+        ("peak_concurrency", "bigint"),
+        ("n_sessions_started", "bigint"),
+    ]
+    assert empty.count() == 0
 
 
 def test_o14_null_source_stratum_kept(spark):
@@ -2912,6 +2983,13 @@ def test_w21_carried_in_daily_peaks_vs_w20(spark):
     # w20's documented contract on the same frame: start-days only,
     # day-6 peak sampled at u6's start AFTER the carried sessions ended
     assert got20 == {0: (3, 3), 5: (3, 3), 6: (1, 1)}, got20
+    empty = peak_concurrency_daily(df.limit(0))
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("epoch_day", "bigint"),
+        ("peak_concurrency", "bigint"),
+        ("n_sessions_started", "bigint"),
+    ]
+    assert empty.count() == 0
 
 
 def test_t22_dsir_selects_target_and_contaminated(spark, sf_dir):
