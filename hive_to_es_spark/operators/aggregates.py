@@ -13,6 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.functions.money import cents, sum_cents
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.registry import register
@@ -392,15 +393,15 @@ def a14_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# a15 — Count-Min sketch (depth 4 x width 256) with salted md5-prefix
+# a15 — Count-Min sketch (depth 4 x width 256) with salted md5_60
 # row hashes, so the WHOLE sketch is engine-portable and value-
 # verified (unlike a8's HLL, whose sketch bytes are engine-specific).
 # est >= exact is the CMS guarantee; the probe emits both so the
 # overestimate is visible data, not a hidden property.
-_A15_ORACLE = """
+_A15_ORACLE = f"""
 WITH rows_h AS (
   SELECT l_suppkey AS k, t.i,
-         CAST(concat('0x', substr(md5(concat('c', t.i, '|', CAST(l_suppkey AS VARCHAR))), 1, 15)) AS BIGINT) % 256 AS bucket
+         {md5_60_sql("concat('c', t.i, '|', l_suppkey)")} % 256 AS bucket
   FROM lineitem CROSS JOIN (SELECT unnest(range(4)) AS i) t
 ),
 cms AS (SELECT i, bucket, CAST(count(*) AS BIGINT) AS n FROM rows_h GROUP BY i, bucket),
@@ -409,7 +410,7 @@ SELECT e.k AS l_suppkey, e.exact_n, min(c.n) AS cms_est
 FROM exact e
 CROSS JOIN (SELECT unnest(range(4)) AS i) t
 JOIN cms c ON c.i = t.i
-  AND c.bucket = CAST(concat('0x', substr(md5(concat('c', t.i, '|', CAST(e.k AS VARCHAR))), 1, 15)) AS BIGINT) % 256
+  AND c.bucket = {md5_60_sql("concat('c', t.i, '|', e.k)")} % 256
 GROUP BY e.k, e.exact_n
 """
 
@@ -417,16 +418,9 @@ _CMS_DEPTH, _CMS_WIDTH = 4, 256
 
 
 def _cms_bucket(key, i):
-    """Salted row hash -> CMS bucket (engine-portable md5 prefix)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("c"), F.lit(str(i)), F.lit("|"), key.cast("string"))),
-                1, 15,
-            ),
-            16, 10,
-        ).cast("bigint")
-        % _CMS_WIDTH
+    """Salted row hash -> CMS bucket (md5_60 of 'c<i>|<key>')."""
+    return hash_bucket(
+        F.concat(F.lit("c"), F.lit(str(i)), F.lit("|"), key.cast("string")), _CMS_WIDTH
     )
 
 
@@ -924,24 +918,17 @@ _A23_CELL = 16  # units per cell side
 _A23_HUBS = 5
 
 
-def _a23_md5b_sql(expr: str, n: int) -> str:
-    return (
-        f"CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 15)) "
-        f"AS BIGINT) % {n}"
-    )
-
-
 _A23_ORACLE = f"""
 WITH pts AS (
   SELECT CASE WHEN event_id % 5 = 0
            THEN (4 + 6 * ((event_id // 5) % {_A23_HUBS})) * {_A23_CELL}
-                + {_a23_md5b_sql("event_id", _A23_CELL)}
-           ELSE {_a23_md5b_sql("event_id + 13", _A23_GRID * _A23_CELL)}
+                + {md5_60_sql("event_id")} % {_A23_CELL}
+           ELSE {md5_60_sql("event_id + 13")} % {_A23_GRID * _A23_CELL}
          END AS x,
          CASE WHEN event_id % 5 = 0
            THEN (3 + 5 * ((event_id // 5) % {_A23_HUBS})) * {_A23_CELL}
-                + {_a23_md5b_sql("event_id + 7", _A23_CELL)}
-           ELSE {_a23_md5b_sql("event_id + 29", _A23_GRID * _A23_CELL)}
+                + {md5_60_sql("event_id + 7")} % {_A23_CELL}
+           ELSE {md5_60_sql("event_id + 29")} % {_A23_GRID * _A23_CELL}
          END AS y
   FROM events
 ),
@@ -979,8 +966,6 @@ def a23_grid_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood equijoin (broadcast — both sides are the bounded
     cell table), integer cross-multiplied flag. No window, no
     cartesian, no second corpus pass."""
-    from hive_to_es_spark.operators.sort_set import hash_bucket
-
     e = load_tables(spark, sf_dir).events
     eid = F.col("event_id")
     # Integer DIV throughout — double division + cast floors correctly

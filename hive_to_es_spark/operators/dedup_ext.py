@@ -20,6 +20,7 @@ from hive_to_es_spark.io import load_tables, table_row_count
 _LOG = logging.getLogger(__name__)
 _SUBHALF_THRESHOLD_LOGGED = False  # once-per-process log gate (d16/e11)
 from hive_to_es_spark.functions.graph import components_ctes
+from hive_to_es_spark.functions.hashing import md5_60, md5_60_sql
 from hive_to_es_spark.functions.lifecycle import materialize
 from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
 from hive_to_es_spark.operators.similarity import (
@@ -32,13 +33,9 @@ from hive_to_es_spark.operators.similarity import (
 from hive_to_es_spark.registry import register
 
 
-# 60-bit SimHash with a cross-engine word hash: the first 15 hex chars
-# of md5(word) parsed as a BIGINT — Spark `conv(substr(md5,1,15),16,10)`
-# and DuckDB `CAST(concat('0x', substr(md5,1,15)) AS BIGINT)` agree
-# exactly (verified; DuckDB's md5_number_upper is little-endian and
-# does NOT). 15 hex chars = 60 bits keeps the value < 2^63 so both
-# engines stay in signed-64 territory. The vote sums / signature /
-# band SQL is generated to mirror the Spark expressions term-for-term.
+# 60-bit SimHash with a cross-engine word hash, md5_60(word). The vote
+# sums / signature / band SQL is generated to mirror the Spark
+# expressions term-for-term.
 _D3_BITS = 60
 _D3_ORACLE = f"""
 WITH words AS (
@@ -46,7 +43,7 @@ WITH words AS (
   FROM documents
 ),
 hashed AS (
-  SELECT doc_id, CAST(concat('0x', substr(md5(w), 1, 15)) AS BIGINT) AS h
+  SELECT doc_id, {md5_60_sql("w")} AS h
   FROM words
 ),
 votes AS (
@@ -78,7 +75,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     slower: HOF lambdas are interpreted per element).
     """
     words = F.explode(F.array_distinct(F.split(F.lower("text"), " "))).alias("w")
-    word_hash = F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("bigint")
+    word_hash = md5_60("w")
     hashed = docs.select("doc_id", words).select("doc_id", word_hash.alias("h"))
     votes = hashed.groupBy("doc_id").agg(
         *[
@@ -865,28 +862,26 @@ def d7_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # d8 — MinHash-LSH with an ENGINE-PORTABLE hash family, closing the
 # gap d2 must leave open: pyspark.ml's MinHashLSH signatures are
 # engine-specific (rows-only forever), but the same algorithm built
-# from salted md5-prefix hashes (d3's trick) is value-verifiable in
-# DuckDB down to every signature component. 8 hash functions, banded
-# 8x1 (threshold ~ (1/b)^(1/r): high-recall candidate generation);
-# estimated Jaccard = matching-component fraction, gated at 0.25.
+# from salted md5_60 hashes is value-verifiable in DuckDB down to
+# every signature component. 8 hash functions, banded 8x1 (threshold
+# ~ (1/b)^(1/r): high-recall candidate generation); estimated
+# Jaccard = matching-component fraction, gated at 0.25.
 _D8_N_HASHES = 8
 
 
 def portable_minhash_candidates(d: DataFrame):
     """Shared d8/d13 pipeline head: (shingles, signatures, banded
-    candidate pairs) with the salted md5-prefix hash family the DuckDB
+    candidate pairs) with the salted md5_60 hash family the DuckDB
     oracle can recompute term-for-term."""
     shingles = d.select(
         "doc_id", F.explode(word_shingles(F.col("text"))).alias("w")
     )
 
-    def h(i):
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"s{i}|"), F.col("w"))), 1, 15), 16, 10
-        ).cast("bigint")
-
     mh = shingles.groupBy("doc_id").agg(
-        *[F.min(h(i)).alias(f"mh{i}") for i in range(_D8_N_HASHES)]
+        *[
+            F.min(md5_60(F.concat(F.lit(f"s{i}|"), F.col("w")))).alias(f"mh{i}")
+            for i in range(_D8_N_HASHES)
+        ]
     )
     bands = mh.select(
         "doc_id",
@@ -940,7 +935,7 @@ def portable_minhash_ctes(shingles: str) -> str:
     (id_a, id_b) and scored (cand with est_jaccard)."""
     n = _D8_N_HASHES
     mins = ", ".join(
-        f"min(CAST(concat('0x', substr(md5(concat('s{i}|', shingle)), 1, 15)) AS BIGINT)) AS mh{i}"
+        "min(" + md5_60_sql(f"concat('s{i}|', shingle)") + f") AS mh{i}"
         for i in range(n)
     )
     bands = " UNION ALL ".join(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.functions.money import sum_cents
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.operators.windows import ranged_running_sum
@@ -424,7 +425,7 @@ def p9_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # normalized-text hash -> reproducible hash split (o5) -> per-(split,
 # lang) accounting. Every stage is a SQL-expressible transformation, so
 # the WHOLE pipeline is value-verified end-to-end.
-_P10_ORACLE = """
+_P10_ORACLE = f"""
 WITH feats AS (
   SELECT doc_id, lang, text,
          len(string_split(text, ' ')) AS n_tokens,
@@ -448,8 +449,7 @@ assigned AS (
          CASE WHEN bucket < 90 THEN 'train'
               WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
   FROM (
-    SELECT *, CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                % 100 AS bucket
+    SELECT *, {md5_60_sql("doc_id")} % 100 AS bucket
     FROM dedup
   ) bucketed
 )
@@ -476,7 +476,6 @@ def p10_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture has no exact dups, so the window is pass-through here —
     the keep-min-id semantics are proven with injected duplicates in
     tests/test_pipeline.py (the e5 pattern)."""
-    from hive_to_es_spark.operators.sort_set import hash_bucket
     from hive_to_es_spark.operators.text_ext import quality_expr
 
     d = load_tables(spark, sf_dir).documents
@@ -2229,8 +2228,7 @@ _P22_ORACLE = f"""
 SELECT lang,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST((count(*) + {_P22_R - 1}) // {_P22_R} AS BIGINT) AS n_files,
-       CAST(sum(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                AS BIGINT) % 1000000) AS BIGINT) AS id_hash_sum,
+       CAST(sum({md5_60_sql("doc_id")} % 1000000) AS BIGINT) AS id_hash_sum,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM documents GROUP BY lang
 """
@@ -2252,7 +2250,6 @@ def p22_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_files match proves the layout landed exactly where the knob put
     it. tests/test_pipeline.py additionally asserts the before-layout
     really was fragmented (compaction tested against something)."""
-    from hive_to_es_spark.operators.sort_set import hash_bucket
     from hive_to_es_spark.pipeline import dataset_tmp_path
 
     docs = load_tables(spark, sf_dir).documents
@@ -2712,8 +2709,7 @@ mquota AS (
 mix AS (
   SELECT s.doc_id
   FROM s7 s JOIN mquota q USING (lang)
-  WHERE CAST(concat('0x', substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) % 1000000 < q.thresh_ppm
+  WHERE {md5_60_sql("s.doc_id")} % 1000000 < q.thresh_ppm
 ),
 lvt AS (
   SELECT b.doc_id,
@@ -2847,7 +2843,6 @@ def p26_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_to_es_spark.operators.dedup_ext import (
         minhash_verified_jaccard_pairs,
     )
-    from hive_to_es_spark.operators.sort_set import hash_bucket
 
     d = load_tables(spark, sf_dir).documents.filter(
         F.col("text").isNotNull()
@@ -2976,8 +2971,7 @@ SELECT shard_id,
        CAST(sum(n_chars) AS BIGINT) AS total_weight,
        min(doc_id) AS min_key,
        max(doc_id) AS max_key,
-       CAST(sum(CAST(concat('0x', substr(md5(text), 1, 15)) AS BIGINT)
-                % 1000000000) AS BIGINT) AS content_sig
+       CAST(sum({md5_60_sql("text")} % 1000000000) AS BIGINT) AS content_sig
 FROM assigned GROUP BY shard_id
 """
 
@@ -3033,7 +3027,6 @@ def p27_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     summarized per shard with a content signature — the hash gate
     proves the full assign -> stage -> commit -> read-back loop
     lossless against a filesystem-free oracle."""
-    from hive_to_es_spark.operators.sort_set import hash_bucket
     from hive_to_es_spark.pipeline import dataset_tmp_path
 
     d = load_tables(spark, sf_dir).documents.select(

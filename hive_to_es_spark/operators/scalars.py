@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.registry import register
 
@@ -913,8 +914,7 @@ _X15_ORACLE = (
     f"""
 WITH e0 AS (
   SELECT doc_id % {_X15_DOMAINS} AS src,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % {_X15_DOMAINS} AS dst
+         {md5_60_sql("doc_id")} % {_X15_DOMAINS} AS dst
   FROM documents
 ),
 ew AS (
@@ -1033,7 +1033,6 @@ def x15_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (edge census); every iteration runs on the |domains|-bounded
     edge/rank tables."""
     d = load_tables(spark, sf_dir).documents
-    from hive_to_es_spark.operators.sort_set import hash_bucket
 
     edges = (
         d.select(

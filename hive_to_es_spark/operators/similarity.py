@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.registry import register
 
@@ -1344,7 +1345,7 @@ def s14_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # swaps in s6's refine loop without changing this plan.
 _S15_M, _S15_SUB, _S15_K, _S15_SHORT = 16, 4, 64, 100
 
-_S15_ORACLE = """
+_S15_ORACLE = f"""
 WITH iv AS (
   SELECT vec_id,
          list_transform(embedding,
@@ -1354,8 +1355,7 @@ WITH iv AS (
 samp AS (
   SELECT v, CAST(row_number() OVER (ORDER BY d, vec_id) - 1 AS BIGINT) AS code
   FROM (SELECT vec_id, v,
-               CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) % 1000000 AS d
+               {md5_60_sql("vec_id")} % 1000000 AS d
         FROM iv ORDER BY d, vec_id LIMIT 64)
 ),
 ms AS (SELECT CAST(unnest(range(0, 16)) AS BIGINT) AS m),
@@ -1454,7 +1454,6 @@ def s15_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             _dbl("embedding"), lambda x: F.round(x * 1_000_000).cast("bigint")
         ).alias("v"),
     )
-    from hive_to_es_spark.operators.sort_set import hash_bucket
 
     draw = hash_bucket("vec_id", 1_000_000)
     samp = (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60, md5_60_sql
 from hive_to_es_spark.functions.lifecycle import materialize
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.registry import register
@@ -76,26 +77,11 @@ def o3_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.sample(fraction=0.1, seed=42).select("l_orderkey", "l_linenumber")
 
 
-def hash_bucket(key, n: int = 100):
-    """Deterministic, engine-portable bucket in [0, n): first 15 hex
-    chars of md5(key-as-string) as a bigint, mod n. The substrate for
-    reproducible sampling/splits: the bucket is a pure function of the
-    KEY, so it survives re-partitioning, reruns, engine swaps, and
-    incremental appends (new rows never perturb old assignments —
-    exactly what o3's PRNG sample cannot promise). Same md5-prefix
-    trick d3 uses; 60 bits keeps both engines in signed-64 range."""
-    c = F.col(key) if isinstance(key, str) else key
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("bigint") % n
-    )
-
-
-_O4_ORACLE = """
+_O4_ORACLE = f"""
 SELECT doc_id, bucket
 FROM (
   SELECT doc_id,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-           % 100 AS bucket
+         {md5_60_sql("doc_id")} % 100 AS bucket
   FROM documents
 )
 WHERE bucket < 5
@@ -115,7 +101,7 @@ def o4_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_O5_ORACLE = """
+_O5_ORACLE = f"""
 SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM (
@@ -125,8 +111,7 @@ FROM (
               ELSE 'test' END AS split
   FROM (
     SELECT n_chars,
-           CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-             % 100 AS bucket
+           {md5_60_sql("doc_id")} % 100 AS bucket
     FROM documents
   )
 )
@@ -158,14 +143,13 @@ def o5_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Integer-only threshold arithmetic (bucket*cnt < tgt*1000) so both
 # engines compare exact bigints — no float rate, no rounding drift.
-_O6_ORACLE = """
+_O6_ORACLE = f"""
 WITH counts AS (SELECT lang, count(*) AS cnt FROM documents GROUP BY lang),
 tgt AS (SELECT min(cnt) AS tgt FROM counts),
 kept AS (
   SELECT d.lang, c.cnt
   FROM documents d JOIN counts c ON d.lang = c.lang, tgt
-  WHERE (CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-         % 1000) * c.cnt < tgt.tgt * 1000
+  WHERE ({md5_60_sql("d.doc_id")} % 1000) * c.cnt < tgt.tgt * 1000
 )
 SELECT lang, CAST(max(cnt) AS BIGINT) AS n_before,
        CAST(count(*) AS BIGINT) AS n_kept
@@ -390,8 +374,7 @@ def _o9_oracle() -> str:
 WITH {QUALITY_CTE_SQL},
 drawn AS (
   SELECT lang, quality,
-         (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-          % 1000000) AS draw
+         ({md5_60_sql("doc_id")} % 1000000) AS draw
   FROM scored
 )
 SELECT lang,
@@ -455,7 +438,7 @@ def o9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-_O10_ORACLE = """
+_O10_ORACLE = f"""
 WITH counts AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS c FROM documents GROUP BY lang
 ),
@@ -470,8 +453,7 @@ quota AS (
 )
 SELECT d.doc_id, d.lang, q.thresh_ppm
 FROM documents d JOIN quota q ON d.lang = q.lang
-WHERE CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-        % 1000000 < q.thresh_ppm
+WHERE {md5_60_sql("d.doc_id")} % 1000000 < q.thresh_ppm
 """
 
 
@@ -541,7 +523,7 @@ def prefix_fingerprint(text_col: str = "text"):
 # grouping cost. Note the documented instability under growth: a
 # group's size (hence its members' keep threshold) changes as the
 # corpus grows — by design, the thinning tracks the CURRENT corpus.
-_O11_ORACLE = """
+_O11_ORACLE = f"""
 WITH g AS (
   SELECT doc_id,
          CAST(count(*) OVER (
@@ -550,8 +532,7 @@ WITH g AS (
   FROM documents
 )
 SELECT doc_id, group_size FROM g
-WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-      % 1000000 < 1000000 // group_size
+WHERE {md5_60_sql("doc_id")} % 1000000 < 1000000 // group_size
 """
 
 
@@ -576,7 +557,7 @@ def o11_dup_aware_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # o12 — fractional-epoch upsampling: the inverse of o10's thinning.
-_O12_ORACLE = """
+_O12_ORACLE = f"""
 WITH census AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS c FROM documents GROUP BY lang
 ),
@@ -588,9 +569,7 @@ q AS (
 d AS (
   SELECT doc_id, documents.lang,
          wppm // 1000000
-         + CASE WHEN CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)),
-                                              1, 15)) AS BIGINT) % 1000000
-                     < wppm % 1000000
+         + CASE WHEN {md5_60_sql("doc_id")} % 1000000 < wppm % 1000000
                 THEN 1 ELSE 0 END AS n_copies
   FROM documents JOIN q USING (lang)
 )
@@ -649,7 +628,7 @@ def o12_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # after the fact). o13 prevents it by construction: the split is a
 # pure function of the GROUP fingerprint (o11's 8-word-prefix class),
 # so every member of a dup group rides together.
-_O13_ORACLE = """
+_O13_ORACLE = f"""
 WITH g AS (
   SELECT doc_id,
          md5(array_to_string(string_split(lower(text), ' ')[1:8], ' ')) AS gkey,
@@ -659,9 +638,9 @@ WITH g AS (
   FROM documents
 )
 SELECT doc_id, group_size,
-       CASE WHEN CAST(concat('0x', substr(md5(gkey), 1, 15)) AS BIGINT) % 100 < 90
+       CASE WHEN {md5_60_sql("gkey")} % 100 < 90
             THEN 'train'
-            WHEN CAST(concat('0x', substr(md5(gkey), 1, 15)) AS BIGINT) % 100 < 95
+            WHEN {md5_60_sql("gkey")} % 100 < 95
             THEN 'val'
             ELSE 'test' END AS split
 FROM g
@@ -730,14 +709,13 @@ def o13_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _O14_N_RANGES = 16
-_O14_HBITS = 60  # hash_bucket's 15-hex md5 prefix domain
+_O14_HBITS = 60  # md5_60 values lie in [0, 2^60)
 
-_O14_ORACLE = """
+_O14_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, source,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS tok,
-         CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) AS h
+         {md5_60_sql("doc_id")} AS h
   FROM documents
 ),
 per_src AS (
@@ -785,14 +763,11 @@ def token_budget_mix(d: DataFrame) -> DataFrame:
     and the budget join are now null-safe via _O14_NULL_KEY /
     eqNullSafe). See the block comment above for the two-pass
     fixed-domain plan."""
-    h = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
     toks = d.select(
         "doc_id",
         "source",
         F.size(F.split("text", " ")).cast("bigint").alias("tok"),
-        h.alias("h"),
+        md5_60("doc_id").alias("h"),
     )
     weights = (
         toks.groupBy("source")
@@ -987,8 +962,7 @@ d AS (
 ),
 k AS (
   SELECT bucket, score_fp,
-         (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-               AS BIGINT) % 1000000)
+         ({md5_60_sql("doc_id")} % 1000000)
            < CASE bucket WHEN 'head' THEN {_O15_RATE_PPM['head']}
                          WHEN 'middle' THEN {_O15_RATE_PPM['middle']}
                          ELSE {_O15_RATE_PPM['tail']} END AS kept

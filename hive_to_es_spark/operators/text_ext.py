@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql
 from hive_to_es_spark.registry import register
@@ -2050,12 +2051,11 @@ def t21_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc set. Both distributions come out of ONE census pass
 # (count FILTER), not two scans.
 #
-# Cross-engine determinism: buckets use the md5-prefix idiom
-# (sort_set.hash_bucket, same 60-bit trick as o4/d3); the float sum of
-# per-occurrence log-ratios is rounded to 4 dp exactly like t8's
-# lm_score (per-term ln() may differ by <=1 ulp between libm and
-# java.lang.Math — the documented 1e-13-class noise the rounding
-# absorbs). `selected` thresholds the ROUNDED score so the verdict
+# Cross-engine determinism: buckets are hash_bucket (md5_60 mod B);
+# the float sum of per-occurrence log-ratios is rounded to 4 dp
+# exactly like t8's lm_score (per-term ln() may differ by <=1 ulp
+# between libm and java.lang.Math — the documented 1e-13-class noise
+# the rounding absorbs). `selected` thresholds the ROUNDED score so the verdict
 # can never disagree across engines.
 _T22_B = 4096
 _T22_DOM_EVERY_TGT = 4  # one rendered domain token per 4 words (target)
@@ -2085,8 +2085,7 @@ feats AS (
 ),
 occ AS (
   SELECT doc_id, is_target,
-         CAST(concat('0x', substr(md5(unnest(fs)), 1, 15)) AS BIGINT)
-           % {_T22_B} AS b
+         {md5_60_sql("unnest(fs)")} % {_T22_B} AS b
   FROM feats
 ),
 census AS (
@@ -2204,7 +2203,6 @@ def t22_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastHashJoin probe, final partial-aggregated
     groupBy(doc_id). No cartesian, no corpus-keyed window, no sort."""
     from hive_to_es_spark.functions.lifecycle import materialize
-    from hive_to_es_spark.operators.sort_set import hash_bucket
 
     d = (
         load_tables(spark, sf_dir)

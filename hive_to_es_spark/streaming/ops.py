@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_to_es_spark.functions.hashing import md5_60, md5_60_sql
 from hive_to_es_spark.functions.money import cents, sum_cents
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
@@ -327,11 +328,10 @@ def e4_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tf_watermark_tumbling(load_tables(spark, sf_dir).events)
 
 
-_E5_ORACLE = """
+_E5_ORACLE = f"""
 WITH dupes AS (
   SELECT * FROM events
-  WHERE CAST(concat('0x', substr(md5('e5|' || CAST(event_id AS VARCHAR)), 1, 15))
-             AS BIGINT) % 7 = 0
+  WHERE {md5_60_sql("'e5|' || event_id")} % 7 = 0
 ),
 unioned AS (
   SELECT * FROM events UNION ALL SELECT * FROM dupes
@@ -349,7 +349,7 @@ FROM ranked WHERE rn = 1
 def e5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup on event_id over an input that actually CONTAINS
     duplicates: the fixture's event_ids are unique, so a deterministic
-    ~1/7 keyed sample (portable md5-prefix hash, same trick as o4) is
+    ~1/7 keyed sample (md5_60 of 'e5|<event_id>') is
     UNION ALL'd back in as exact row copies before dropDuplicates.
     If the dedup did not fire, the row count would exceed the oracle's
     — the green correctness entry now proves dedup, not projection.
@@ -365,15 +365,7 @@ def e5_duped_input(ev: DataFrame) -> DataFrame:
     the duplicate-bearing input e5 dedups (exposed for tests to assert
     the duplication really happened)."""
     dupes = ev.filter(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("e5|"), F.col("event_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 7
-        == 0
+        md5_60(F.concat(F.lit("e5|"), F.col("event_id").cast("string"))) % 7 == 0
     )
     return ev.unionByName(dupes)
 
@@ -1047,21 +1039,16 @@ def e13_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _E14_DELAY_MIN = 60
 
-_E14_HASH = (
-    "CAST(concat('0x', substr(md5('{salt}|' || CAST(event_id AS VARCHAR)), 1, 15)) "
-    "AS BIGINT)"
-)
-
 _E14_ORACLE = f"""
 WITH base AS (
   SELECT event_id, ts, user_id, event_type, value FROM events
 ),
 redelivered AS (
   SELECT event_id, ts + INTERVAL 10 MINUTE AS ts, user_id, event_type, value
-  FROM base WHERE {_E14_HASH.format(salt='e14a')} % 11 = 0
+  FROM base WHERE {md5_60_sql("'e14a|' || event_id")} % 11 = 0
   UNION ALL
   SELECT event_id, ts + INTERVAL 90 MINUTE AS ts, user_id, event_type, value
-  FROM base WHERE {_E14_HASH.format(salt='e14b')} % 13 = 0
+  FROM base WHERE {md5_60_sql("'e14b|' || event_id")} % 13 = 0
 ),
 uni AS (
   SELECT * FROM base UNION ALL SELECT * FROM redelivered
@@ -1222,20 +1209,7 @@ def e14_redelivered_input(ev: DataFrame) -> DataFrame:
 
     def sample(salt: str, mod: int):
         return base.filter(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(salt + "|"), F.col("event_id").cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % mod
+            md5_60(F.concat(F.lit(salt + "|"), F.col("event_id").cast("string"))) % mod
             == 0
         )
 

@@ -208,6 +208,29 @@ def test_sign_bucket_matches_sign_bucket_sql(spark):
     assert got == want
 
 
+def test_md5_60_matches_md5_60_sql(spark):
+    """md5_60 and md5_60_sql agree on bigint keys at both ends of the
+    signed range, on empty, salted and non-ASCII string keys, and on
+    NULL (NULL in both engines)."""
+    import duckdb
+
+    from hive_to_es_spark.functions.hashing import md5_60, md5_60_sql
+
+    con = duckdb.connect()
+    for duck_type, spark_type, keys in [
+        ("BIGINT", "BIGINT", [0, 1, -1, 42, 2**62, -(2**63), None]),
+        ("VARCHAR", "STRING", ["", "e5|42", "ß漢字 ", None]),
+    ]:
+        rows = list(enumerate(keys))
+        con.execute(f"CREATE OR REPLACE TABLE t (i INTEGER, k {duck_type})")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        want = sorted(con.execute(f"SELECT i, {md5_60_sql('k')} FROM t").fetchall())
+        t = spark.createDataFrame(rows, f"i INT, k {spark_type}")
+        got = sorted(map(tuple, t.select("i", md5_60("k")).collect()))
+        assert got == want, duck_type
+        assert want[-1][1] is None and all(0 <= h < 2**60 for _, h in want[:-1])
+
+
 def test_centroids_match_centroids_sql(spark):
     """_centroids and centroids_sql agree on vectors narrower (3) and
     wider (70) than the fixtures' 64 dimensions, over two groups; a
@@ -2940,8 +2963,13 @@ def test_w21_carried_in_daily_peaks_vs_w20(spark):
     day whose post-start maximum is BELOW the carried-in concurrency
     report the carry — all places w20's peaks-at-starts contract
     understates or omits. Expected values derived by hand."""
+    import duckdb
+
     from hive_to_es_spark.operators.windows import (
+        _W9_GAP_US,
         _W20_DAY_US,
+        _W20_ORACLE,
+        _W21_ORACLE,
         peak_concurrency,
         peak_concurrency_daily,
     )
@@ -2983,6 +3011,17 @@ def test_w21_carried_in_daily_peaks_vs_w20(spark):
     # w20's documented contract on the same frame: start-days only,
     # day-6 peak sampled at u6's start AFTER the carried sessions ended
     assert got20 == {0: (3, 3), 5: (3, 3), 6: (1, 1)}, got20
+    # both oracles on the same 17 events: the fixtures cannot tell w21
+    # from w20 (their oracle results are equal there), this frame can
+    con = duckdb.connect()
+    con.execute("CREATE TABLE raw (user_id BIGINT, event_id BIGINT, tus BIGINT)")
+    con.executemany("INSERT INTO raw VALUES (?, ?, ?)", ev)
+    con.execute(
+        "CREATE VIEW events AS SELECT user_id, event_id, make_timestamp(tus) AS ts FROM raw"
+    )
+    for oracle, want in [(_W21_ORACLE, got21), (_W20_ORACLE, got20)]:
+        rows = con.execute(oracle.format(gap=_W9_GAP_US)).fetchall()
+        assert {d: (p, n) for d, p, n in rows} == want
     empty = peak_concurrency_daily(df.limit(0))
     assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
         ("epoch_day", "bigint"),
