@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_to_es_spark.functions.hashing import md5_60, md5_60_sql
+from hive_to_es_spark.functions.hashing import hash_bucket, md5_60_sql
 from hive_to_es_spark.functions.money import cents, sum_cents
 from hive_to_es_spark.io import load_tables
 from hive_to_es_spark.operators.dedup import shingle_rows, shingle_sql, word_shingles
@@ -365,7 +365,7 @@ def e5_duped_input(ev: DataFrame) -> DataFrame:
     the duplicate-bearing input e5 dedups (exposed for tests to assert
     the duplication really happened)."""
     dupes = ev.filter(
-        md5_60(F.concat(F.lit("e5|"), F.col("event_id").cast("string"))) % 7 == 0
+        hash_bucket(F.concat(F.lit("e5|"), F.col("event_id").cast("string")), 7) == 0
     )
     return ev.unionByName(dupes)
 
@@ -1208,10 +1208,8 @@ def e14_redelivered_input(ev: DataFrame) -> DataFrame:
     base = ev.select("event_id", "ts", "user_id", "event_type", "value")
 
     def sample(salt: str, mod: int):
-        return base.filter(
-            md5_60(F.concat(F.lit(salt + "|"), F.col("event_id").cast("string"))) % mod
-            == 0
-        )
+        key = F.concat(F.lit(salt + "|"), F.col("event_id").cast("string"))
+        return base.filter(hash_bucket(key, mod) == 0)
 
     late10 = sample("e14a", 11).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 10 MINUTES")
