@@ -27,8 +27,11 @@ from hive_to_es_spark.operators.similarity import (
     SIGN_BUCKET_SQL,
     _dbl,
     _dot,
+    _ivf_codebook,
     _norm,
+    _rank_cells,
     ivf_codebook_sql,
+    rank_cells_sql,
 )
 from hive_to_es_spark.registry import register
 
@@ -255,16 +258,7 @@ def ngram_jaccard_pairs(
     sh = capped_shingles(docs, df_cap, checkpoint_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     if plan == "banded":
-        cand = minhash_candidate_pairs(sh)
-        sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        common = (
-            cand.join(sha, "doc_a")
-            .join(shb, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_common"))
-        )
-        return _jaccard_from_common(common, sizes, threshold)
+        return _verified_jaccard(minhash_candidate_pairs(sh), sh, sizes, threshold)
     assert plan == "blocked", f"unknown ngram_jaccard_pairs plan {plan!r}"
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -293,6 +287,24 @@ def _jaccard_from_common(
         .filter(jac >= threshold)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
+
+
+def _verified_jaccard(
+    cand: DataFrame, sh: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-verify tail of d4's banded branch, d10 and d11: join each
+    (doc_a, doc_b) candidate back to both full shingle sets of the
+    (doc_id, shingle) relation `sh`, count the shared shingles, then
+    _jaccard_from_common."""
+    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
+    common = (
+        cand.join(sha, "doc_a")
+        .join(shb, ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    return _jaccard_from_common(common, sizes, threshold)
 
 
 def jaccard_pair_ctes(sh: str, threshold: float) -> str:
@@ -420,15 +432,7 @@ def prefix_filtered_jaccard_pairs(
     sh = materialize(shingle_rows(docs), checkpoint_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     cand = _prefix_candidates(sh, sizes, threshold)
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return _jaccard_from_common(common, sizes, threshold)
+    return _verified_jaccard(cand, sh, sizes, threshold)
 
 
 @register("d10_dedup_jaccard_prefix", _D10_ORACLE)
@@ -628,15 +632,7 @@ def minhash_verified_jaccard_pairs(
     sh = materialize(shingle_rows(docs), checkpoint_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     cand = minhash_candidate_pairs(sh, n_hashes)
-    sha = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    shb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(sha, "doc_a")
-        .join(shb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    return _jaccard_from_common(common, sizes, threshold)
+    return _verified_jaccard(cand, sh, sizes, threshold)
 
 
 @register("d11_dedup_minhash_verified", _D11_ORACLE)
@@ -1559,24 +1555,14 @@ def d16_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _D17_TAU = 0.3
 
 _D17_ORACLE = f"""
-WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
+WITH e AS (
+  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
+  FROM embeddings
 ),
-dists AS (
-  SELECT e.vec_id, c.c_label,
-         list_distance(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-                       c.cvec) AS d,
-         row_number() OVER (PARTITION BY e.vec_id ORDER BY
-           list_distance(list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-                         c.cvec) ASC,
-           c.c_label ASC) AS rn
-  FROM embeddings e CROSS JOIN codebook c
-),
+codebook AS ({ivf_codebook_sql("e", "ev")}),
 assigned AS (
-  SELECT d.vec_id, d.c_label AS cell, d.d,
-         list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS ev
-  FROM dists d JOIN embeddings e ON e.vec_id = d.vec_id
-  WHERE rn = 1
+  SELECT vec_id, c_label AS cell, d, ev
+  FROM ({rank_cells_sql("e", "codebook")}) WHERE rn = 1
 ),
 dominated AS (
   SELECT b.vec_id AS v,
@@ -1604,22 +1590,11 @@ def semantic_dedup(e: DataFrame) -> DataFrame:
     rests on).
     The codebook is the per-label centroid table, so cell count scales
     with the label domain of the input."""
-    from hive_to_es_spark.operators.similarity import _ivf_codebook, _l2
-
-    codebook = _ivf_codebook(e)
     vecs = e.select("vec_id", _dbl("embedding").alias("evec"))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("d").asc(), F.col("c_label").asc()
-    )
-    # assignment KEEPS d (distance to the winning centroid) — it is the
-    # centrality that the dominance rule orders on, which is why this
-    # op cannot reuse _rank_cells (that helper drops d after ranking).
+    # d, the distance to the winning centroid, is the centrality the
+    # dominance rule orders on
     assigned = (
-        vecs.crossJoin(F.broadcast(codebook))
-        .select(
-            "vec_id", "evec", "c_label", _l2(F.col("evec"), F.col("cvec")).alias("d")
-        )
-        .withColumn("rn", F.row_number().over(w))
+        _rank_cells(vecs, _ivf_codebook(e))
         .filter(F.col("rn") == 1)
         .select(
             "vec_id",

@@ -334,9 +334,9 @@ def s10_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cosine_topk_arm(cands, k: int):
-    """Shared top-k arm of every recall audit (ann_recall, s12): from
-    (qid, vec_id, ev, qv) candidate rows, the k nearest by the ONE
-    tie-break contract — round(cos, 6) DESC, vec_id ASC. Encoding the
+    """Shared top-k arm of every recall audit (ann_recall, ivf_recall,
+    s12): from (qid, vec_id, ev, qv) candidate rows, the k nearest by
+    the ONE tie-break contract — round(cos, 6) DESC, vec_id ASC. Encoding the
     contract once keeps the audits from silently drifting apart."""
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
@@ -431,40 +431,63 @@ def ivf_codebook_sql(source: str, vec: str) -> str:
     return f"SELECT label AS c_label, cvec FROM ({centroids_sql(source, 'label', vec)})"
 
 
+def rank_cells_sql(vecs: str, codebook: str, on: str = "TRUE") -> str:
+    """DuckDB twin of _rank_cells: every column of the relation `vecs`
+    (vec_id, ev DOUBLE[], ...) as v, joined to `codebook` (c_label,
+    cvec) as cb on `on`, plus c_label, d (Euclidean distance) and rn
+    ordered by (d, c_label)."""
+    return f"""SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, c_label) AS rn
+  FROM (
+    SELECT v.*, cb.c_label, list_distance(v.ev, cb.cvec) AS d
+    FROM {vecs} v JOIN {codebook} cb ON {on}
+  )"""
+
+
+def ivf_serve_sql(
+    inverted: str, vecs: str, queries: str, codebook: str, nprobe: int = 2, k: int = 3
+) -> str:
+    """DuckDB twin of _ivf_serve over the relations `inverted` (vec_id,
+    bucket), `vecs` and `queries` (vec_id, ev) and `codebook` (c_label,
+    cvec): (query_id, vec_id, cos_sim), top-k per query."""
+    return f"""SELECT query_id, vec_id, cos_sim FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos_sim DESC, vec_id ASC) AS rn
+  FROM (
+    SELECT qc.vec_id AS query_id, i.vec_id,
+           round(list_cosine_similarity(c.ev, qc.ev), 6) AS cos_sim
+    FROM ({rank_cells_sql(queries, codebook)}) qc
+    JOIN {inverted} i ON i.bucket = qc.c_label
+    JOIN {vecs} c ON c.vec_id = i.vec_id
+    WHERE qc.rn <= {nprobe}
+  )
+) WHERE rn <= {k}"""
+
+
 # IVF companion to s4's LSH: the coarse quantizer is the per-label
 # centroid codebook (10 centroids, computed in-query — production would
 # train k-means once and broadcast the codebook table). Assignment =
 # nearest centroid by Euclidean distance with a label tiebreak
 # (row_number, not arg_min: DuckDB's arg_min cannot order by tuples).
-_S5_ORACLE = f"""
-WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
+# s5 probes the query's own cell, s11 its two nearest.
+def _ivf_topk_oracle(nprobe: int) -> str:
+    """DuckDB twin of ivf_topk(embeddings, 0, nprobe, 5)."""
+    return f"""
+WITH e AS (
+  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
+  FROM embeddings
 ),
-dists AS (
-  SELECT e.vec_id, c.c_label,
-         list_distance(list_transform(e.embedding, x -> CAST(x AS DOUBLE)), c.cvec) AS d,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY list_distance(
-                              list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-                              c.cvec) ASC, c.c_label ASC) AS rn
-  FROM embeddings e CROSS JOIN codebook c
-),
-assigned AS (SELECT vec_id, c_label AS bucket FROM dists WHERE rn = 1),
-q AS (
-  SELECT a.bucket AS qbucket,
-         list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS qv
-  FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
-  WHERE e.vec_id = 0
-)
-SELECT e.vec_id, a.bucket,
-       round(list_cosine_similarity(
-         list_transform(e.embedding, x -> CAST(x AS DOUBLE)), q.qv), 6) AS cos_sim
-FROM embeddings e
-JOIN assigned a ON e.vec_id = a.vec_id, q
-WHERE a.bucket = q.qbucket
-ORDER BY cos_sim DESC, e.vec_id ASC
+codebook AS ({ivf_codebook_sql("e", "ev")}),
+ranked AS ({rank_cells_sql("e", "codebook")}),
+assigned AS (SELECT vec_id, ev, c_label AS bucket FROM ranked WHERE rn = 1),
+q AS (SELECT c_label AS qbucket, ev AS qv FROM ranked WHERE vec_id = 0 AND rn <= {nprobe})
+SELECT a.vec_id, a.bucket, round(list_cosine_similarity(a.ev, q.qv), 6) AS cos_sim
+FROM assigned a JOIN q ON a.bucket = q.qbucket
+ORDER BY cos_sim DESC, a.vec_id ASC
 LIMIT 5
 """
+
+
+_S5_ORACLE = _ivf_topk_oracle(1)
 
 
 def _ivf_serve(
@@ -515,33 +538,30 @@ def _ivf_serve(
     )
 
 
-def _l2(a: Column, b: Column) -> Column:
-    """Euclidean distance between two array<double> columns — the ONE
-    definition of the IVF family's assignment metric (round-11 review:
-    s19's subcentroid re-assignment must use bit-for-bit the same
-    expression as _rank_cells or the split contract can drift)."""
-    return F.sqrt(
+def _rank_cells(
+    vecs: DataFrame, codebook: DataFrame, on: Column | None = None
+) -> DataFrame:
+    """Rank every (vec_id, evec, ...) row against a BROADCAST codebook
+    (c_label, cvec) by Euclidean distance d with a label tiebreak —
+    O(n x k) probes, never a shuffle of vectors. Keeps every column of
+    `vecs` and adds c_label, d and rn: rn = 1 is the cell assignment,
+    rn <= nprobe the multi-probe set. `on` limits the cells a row is
+    ranked against (s19: a member's own two subcells); by default every
+    row meets every cell. The ONE definition of the IVF family's
+    assignment metric and tie-break, so a LOADED (persisted) codebook
+    (s16), s19's sub-cell split and d17's centrality all rank alike."""
+    d = F.sqrt(
         F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+            F.zip_with(F.col("evec"), F.col("cvec"), lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
     )
-
-
-def _rank_cells(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
-    """Rank every (vec_id, evec) row against a BROADCAST codebook by
-    Euclidean distance with a label tiebreak — O(n x k) probes, never
-    a shuffle of vectors. rn = 1 is the cell assignment; rn <= nprobe
-    is the multi-probe set. Factored from the codebook build so a
-    LOADED (persisted) codebook can rank query vectors without
-    recomputing centroids (s16)."""
-    dist = _l2(F.col("evec"), F.col("cvec"))
-    w_assign = Window.partitionBy("vec_id").orderBy(F.col("d").asc(), F.col("c_label").asc())
-    return (
-        vecs.crossJoin(F.broadcast(codebook))
-        .select("vec_id", "evec", "c_label", dist.alias("d"))
-        .select("vec_id", "evec", "c_label", F.row_number().over(w_assign).alias("rn"))
+    cb = F.broadcast(codebook)
+    pairs = vecs.crossJoin(cb) if on is None else vecs.join(cb, on)
+    w = Window.partitionBy("vec_id").orderBy(F.col("d").asc(), F.col("c_label").asc())
+    return pairs.select(*vecs.columns, "c_label", d.alias("d")).withColumn(
+        "rn", F.row_number().over(w)
     )
 
 
@@ -601,35 +621,7 @@ def s5_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(e, query_vec_id=0, nprobe=1, k=5)
 
 
-# nprobe=2 companion: identical CTEs, only the q cell filter widens.
-_S11_ORACLE = f"""
-WITH codebook AS (
-  {ivf_codebook_sql("embeddings", "list_transform(embedding, x -> CAST(x AS DOUBLE))")}
-),
-dists AS (
-  SELECT e.vec_id, c.c_label,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY list_distance(
-                              list_transform(e.embedding, x -> CAST(x AS DOUBLE)),
-                              c.cvec) ASC, c.c_label ASC) AS rn
-  FROM embeddings e CROSS JOIN codebook c
-),
-assigned AS (SELECT vec_id, c_label AS bucket FROM dists WHERE rn = 1),
-q AS (
-  SELECT d.c_label AS qbucket,
-         (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE))
-          FROM embeddings WHERE vec_id = 0) AS qv
-  FROM dists d WHERE d.vec_id = 0 AND d.rn <= 2
-)
-SELECT e.vec_id, a.bucket,
-       round(list_cosine_similarity(
-         list_transform(e.embedding, x -> CAST(x AS DOUBLE)), q.qv), 6) AS cos_sim
-FROM embeddings e
-JOIN assigned a ON e.vec_id = a.vec_id
-JOIN q ON a.bucket = q.qbucket
-ORDER BY cos_sim DESC, e.vec_id ASC
-LIMIT 5
-"""
+_S11_ORACLE = _ivf_topk_oracle(2)
 
 
 @register("s11_ann_ivf_nprobe", _S11_ORACLE)
@@ -661,17 +653,7 @@ def s6_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = e.select("vec_id", _dbl("embedding").alias("evec"))
 
     # deterministic init: the per-label mean vectors (s3's codebook)
-    comp = (
-        e.select("label", F.posexplode(_dbl("embedding")).alias("pos0", "v"))
-        .groupBy("label", "pos0")
-        .agg(F.avg("v").alias("cv"))
-    )
-    codebook_df = comp.groupBy("label").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda x: x.cv).alias(
-            "cvec"
-        )
-    )
-    codebook = [(int(r.label), list(r.cvec)) for r in codebook_df.collect()]
+    codebook = [(int(r.c_label), list(r.cvec)) for r in _ivf_codebook(e).collect()]
 
     dist2 = F.aggregate(
         F.zip_with(F.col("evec"), F.col("cvec"), lambda x, y: (x - y) * (x - y)),
@@ -691,17 +673,7 @@ def s6_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        new_cb = (
-            assigned.select("cluster", F.posexplode("evec").alias("pos0", "v"))
-            .groupBy("cluster", "pos0")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos0", "cv"))), lambda x: x.cv
-                ).alias("cvec")
-            )
-        )
+        new_cb = _centroids(assigned, ["cluster"])
         codebook = [(int(r.cluster), list(r.cvec)) for r in new_cb.collect()]
 
     return (
@@ -909,7 +881,7 @@ def ivf_recall(
     e = load_tables(spark, sf_dir).embeddings
     ranked = _ivf_ranked_cells(e)
     assigned = ranked.filter(F.col("rn") == 1).select(
-        "vec_id", "evec", F.col("c_label").alias("bucket")
+        "vec_id", F.col("evec").alias("ev"), F.col("c_label").alias("bucket")
     )
     qcells = (
         ranked.filter((F.col("vec_id") < n_queries) & (F.col("rn") <= nprobe))
@@ -919,26 +891,16 @@ def ivf_recall(
             F.col("c_label").alias("bucket"),
         )
     )
-
-    def topk(cands: DataFrame) -> DataFrame:
-        w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-        return (
-            cands.select(
-                "qid", "vec_id",
-                F.round(cosine(F.col("evec"), F.col("qv")), 6).alias("cos"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "vec_id")
-        )
-
     queries_b = qcells.filter(F.col("bucket").isNotNull()).select("qid", "qv").distinct()
-    exact = topk(
-        e.select("vec_id", _dbl("embedding").alias("evec")).crossJoin(
+    exact = cosine_topk_arm(
+        e.select("vec_id", _dbl("embedding").alias("ev")).crossJoin(
             F.broadcast(queries_b)
-        )
+        ),
+        k,
     )
-    approx = topk(assigned.join(F.broadcast(qcells.select("qid", "qv", "bucket")), "bucket"))
+    approx = cosine_topk_arm(
+        assigned.join(F.broadcast(qcells.select("qid", "qv", "bucket")), "bucket"), k
+    )
     hits = exact.join(approx, ["qid", "vec_id"]).count()
     total = exact.count()
     return hits / total if total else 0.0
@@ -1544,43 +1506,14 @@ WITH c AS (
   FROM embeddings WHERE vec_id % 50 <> 0
 ),
 q AS (
-  SELECT vec_id AS query_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings WHERE vec_id % 50 = 0
 ),
 codebook AS ({ivf_codebook_sql("c", "ev")}),
 assigned AS (
-  SELECT vec_id, c_label AS bucket FROM (
-    SELECT c.vec_id, cb.c_label,
-           row_number() OVER (PARTITION BY c.vec_id
-                              ORDER BY list_distance(c.ev, cb.cvec) ASC,
-                                       cb.c_label ASC) AS rn
-    FROM c CROSS JOIN codebook cb
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT query_id, c_label AS bucket FROM (
-    SELECT q.query_id, cb.c_label,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY list_distance(q.qv, cb.cvec) ASC,
-                                       cb.c_label ASC) AS rn
-    FROM q CROSS JOIN codebook cb
-  ) WHERE rn <= 2
-),
-pairs AS (
-  SELECT qc.query_id, a.vec_id,
-         round(list_cosine_similarity(c.ev, q.qv), 6) AS cos_sim
-  FROM qcells qc
-  JOIN assigned a ON a.bucket = qc.bucket
-  JOIN c ON c.vec_id = a.vec_id
-  JOIN q ON q.query_id = qc.query_id
+  SELECT vec_id, c_label AS bucket FROM ({rank_cells_sql("c", "codebook")}) WHERE rn = 1
 )
-SELECT query_id, vec_id, cos_sim
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, vec_id ASC) AS rn
-  FROM pairs
-) WHERE rn <= 3
+{ivf_serve_sql("assigned", "c", "q", "codebook")}
 """
 
 
@@ -1769,43 +1702,14 @@ corpus AS (
   FROM embeddings WHERE vec_id % 50 <> 0
 ),
 q AS (
-  SELECT vec_id AS query_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings WHERE vec_id % 50 = 0
 ),
 codebook AS ({ivf_codebook_sql("base", "ev")}),
 assigned AS (
-  SELECT vec_id, c_label AS bucket FROM (
-    SELECT corpus.vec_id, cb.c_label,
-           row_number() OVER (PARTITION BY corpus.vec_id
-                              ORDER BY list_distance(corpus.ev, cb.cvec) ASC,
-                                       cb.c_label ASC) AS rn
-    FROM corpus CROSS JOIN codebook cb
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT query_id, c_label AS bucket FROM (
-    SELECT q.query_id, cb.c_label,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY list_distance(q.qv, cb.cvec) ASC,
-                                       cb.c_label ASC) AS rn
-    FROM q CROSS JOIN codebook cb
-  ) WHERE rn <= 2
-),
-pairs AS (
-  SELECT qc.query_id, a.vec_id,
-         round(list_cosine_similarity(corpus.ev, q.qv), 6) AS cos_sim
-  FROM qcells qc
-  JOIN assigned a ON a.bucket = qc.bucket
-  JOIN corpus ON corpus.vec_id = a.vec_id
-  JOIN q ON q.query_id = qc.query_id
+  SELECT vec_id, c_label AS bucket FROM ({rank_cells_sql("corpus", "codebook")}) WHERE rn = 1
 )
-SELECT query_id, vec_id, cos_sim
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, vec_id ASC) AS rn
-  FROM pairs
-) WHERE rn <= 3
+{ivf_serve_sql("assigned", "corpus", "q", "codebook")}
 """
 
 
@@ -1942,19 +1846,13 @@ corpus AS (
   FROM embeddings WHERE vec_id % 50 <> 0
 ),
 q AS (
-  SELECT vec_id AS query_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ev
   FROM embeddings WHERE vec_id % 50 = 0
 ),
 codebook AS ({ivf_codebook_sql("base", "ev")}),
 assigned AS (
-  SELECT vec_id, is_delta, ev, c_label AS cell FROM (
-    SELECT corpus.*, cb.c_label,
-           row_number() OVER (PARTITION BY corpus.vec_id
-                              ORDER BY list_distance(corpus.ev, cb.cvec) ASC,
-                                       cb.c_label ASC) AS rn
-    FROM corpus CROSS JOIN codebook cb
-  ) WHERE rn = 1
+  SELECT vec_id, is_delta, ev, c_label AS cell
+  FROM ({rank_cells_sql("corpus", "codebook")}) WHERE rn = 1
 ),
 occ AS (
   SELECT cell, count(*) FILTER (NOT is_delta) AS built_n,
@@ -1962,12 +1860,10 @@ occ AS (
   FROM assigned GROUP BY cell
 ),
 flagged AS (SELECT cell FROM occ WHERE (delta_n * 1000000) // greatest(built_n, 1) >= 280000),
-sub_in AS (
-  SELECT a.cell, a.is_delta, a.ev FROM assigned a JOIN flagged f ON a.cell = f.cell
-),
+flg_members AS (SELECT a.* FROM assigned a JOIN flagged f ON a.cell = f.cell),
 sub_cb AS (
   SELECT 2 * cell + CASE WHEN is_delta THEN 1 ELSE 0 END AS c_label, cvec
-  FROM ({centroids_sql("sub_in", "cell, is_delta", "ev")})
+  FROM ({centroids_sql("flg_members", "cell, is_delta", "ev")})
 ),
 keep_cb AS (
   SELECT 2 * c_label AS c_label, cvec FROM codebook
@@ -1975,41 +1871,17 @@ keep_cb AS (
 ),
 new_cb AS (SELECT * FROM sub_cb UNION ALL SELECT * FROM keep_cb),
 reassigned AS (
-  SELECT vec_id, ev, c_label AS bucket FROM (
-    SELECT a.vec_id, a.ev, n.c_label,
-           row_number() OVER (PARTITION BY a.vec_id
-                              ORDER BY list_distance(a.ev, n.cvec) ASC,
-                                       n.c_label ASC) AS rn
-    FROM assigned a JOIN flagged f ON a.cell = f.cell
-    JOIN new_cb n ON n.c_label IN (2 * a.cell, 2 * a.cell + 1)
+  SELECT vec_id, c_label AS bucket FROM (
+    {rank_cells_sql("flg_members", "new_cb", on="cb.c_label IN (2 * v.cell, 2 * v.cell + 1)")}
   ) WHERE rn = 1
 ),
 final_assign AS (
-  SELECT vec_id, ev, bucket FROM reassigned
+  SELECT vec_id, bucket FROM reassigned
   UNION ALL
-  SELECT vec_id, ev, 2 * cell AS bucket FROM assigned
+  SELECT vec_id, 2 * cell AS bucket FROM assigned
   WHERE cell NOT IN (SELECT cell FROM flagged)
-),
-qcells AS (
-  SELECT query_id, qv, c_label AS bucket FROM (
-    SELECT q.query_id, q.qv, n.c_label,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY list_distance(q.qv, n.cvec) ASC,
-                                       n.c_label ASC) AS rn
-    FROM q CROSS JOIN new_cb n
-  ) WHERE rn <= 2
-),
-pairs AS (
-  SELECT qc.query_id, fa.vec_id,
-         round(list_cosine_similarity(fa.ev, qc.qv), 6) AS cos_sim
-  FROM qcells qc JOIN final_assign fa ON fa.bucket = qc.bucket
 )
-SELECT query_id, vec_id, cos_sim
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_sim DESC, vec_id ASC) AS rn
-  FROM pairs
-) WHERE rn <= 3
+{ivf_serve_sql("final_assign", "corpus", "q", "new_cb")}
 """
 
 
@@ -2079,20 +1951,14 @@ def s19_ivf_hot_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select((2 * F.col("c_label")).alias("c_label"), "cvec")
     new_cb = sub_cb.unionByName(keep_cb)
     # re-assign ONLY the flagged cells' members: 2 subcentroid probes
-    # per member, broadcast — never a shuffle of vectors. _l2 is the
-    # same assignment metric _rank_cells uses (one definition).
-    sub_dist = _l2(F.col("evec"), F.col("cvec"))
-    w_sub = Window.partitionBy("vec_id").orderBy(
-        F.col("d").asc(), F.col("c_label").asc()
-    )
+    # per member, broadcast — never a shuffle of vectors
     reassigned = (
-        flg_members.join(
-            F.broadcast(new_cb),
-            (F.col("c_label") == 2 * F.col("cell"))
+        _rank_cells(
+            flg_members,
+            new_cb,
+            on=(F.col("c_label") == 2 * F.col("cell"))
             | (F.col("c_label") == 2 * F.col("cell") + 1),
         )
-        .select("vec_id", "evec", "c_label", sub_dist.alias("d"))
-        .withColumn("rn", F.row_number().over(w_sub))
         .filter(F.col("rn") == 1)
         .select("vec_id", "evec", F.col("c_label").alias("bucket"))
     )

@@ -257,6 +257,87 @@ def test_centroids_match_centroids_sql(spark):
     assert [len(cvec) for _, cvec in got] == [3, 70]
 
 
+def test_rank_cells_and_ivf_serve_match_sql_twins(spark):
+    """_rank_cells and _ivf_serve agree with rank_cells_sql and
+    ivf_serve_sql: [0, 0] is equidistant from cells 0 and 1, so the
+    label tie-break decides its assignment; an `on` restriction ranks
+    each row only against its group's two cells (s19's shape); serving
+    probes two cells per query, one of them chosen by a distance tie,
+    and cuts the top-2 through a cosine tie broken by vec_id."""
+    import duckdb
+
+    from hive_to_es_spark.operators.similarity import (
+        _ivf_serve,
+        _rank_cells,
+        ivf_serve_sql,
+        rank_cells_sql,
+    )
+
+    cells = [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [0.0, 2.0]), (3, [0.0, -2.0])]
+    vecs = [
+        (0, 0, [0.0, 0.0]),
+        (1, 0, [0.9, 0.1]),
+        (2, 1, [-0.5, 1.5]),
+        (3, 1, [0.2, -1.0]),
+        (4, 1, [-2.0, -0.1]),
+        (5, 0, [1.0, 1.0]),
+        (6, 1, [2.0, 2.0]),
+    ]
+    queries = [(100, [0.0, 1.0]), (101, [1.0, 0.5]), (102, [-1.0, -1.0])]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE codebook (c_label INTEGER, cvec DOUBLE[])")
+    con.executemany("INSERT INTO codebook VALUES (?, ?)", cells)
+    con.execute("CREATE TABLE vecs (vec_id INTEGER, grp INTEGER, ev DOUBLE[])")
+    con.executemany("INSERT INTO vecs VALUES (?, ?, ?)", vecs)
+    con.execute("CREATE TABLE queries (vec_id INTEGER, ev DOUBLE[])")
+    con.executemany("INSERT INTO queries VALUES (?, ?)", queries)
+    cb = spark.createDataFrame(cells, "c_label INT, cvec ARRAY<DOUBLE>")
+    v = spark.createDataFrame(vecs, "vec_id INT, grp INT, evec ARRAY<DOUBLE>")
+    q = spark.createDataFrame(queries, "vec_id INT, evec ARRAY<DOUBLE>")
+
+    def rank_rows(sql_on, spark_on):
+        want = sorted(
+            con.execute(
+                "SELECT vec_id, grp, ev, c_label, d, rn "
+                f"FROM ({rank_cells_sql('vecs', 'codebook', sql_on)})"
+            ).fetchall()
+        )
+        got = _rank_cells(v, cb, spark_on)
+        assert got.columns == ["vec_id", "grp", "evec", "c_label", "d", "rn"]
+        got = sorted(map(tuple, got.collect()))
+        assert got == want
+        return got
+
+    ranked = rank_rows("TRUE", None)
+    assert [t[3] for t in ranked if t[0] == 0 and t[5] == 1] == [0]
+    own = rank_rows(
+        "cb.c_label IN (2 * v.grp, 2 * v.grp + 1)",
+        (F.col("c_label") == 2 * F.col("grp")) | (F.col("c_label") == 2 * F.col("grp") + 1),
+    )
+    assert {(t[0], t[3]) for t in own} == {
+        (vid, 2 * grp + i) for vid, grp, _ in vecs for i in (0, 1)
+    }
+
+    # the zero vector has no cosine, so it stays out of the served corpus
+    con.execute("CREATE VIEW corpus AS SELECT * FROM vecs WHERE vec_id > 0")
+    con.execute(
+        "CREATE TABLE inverted AS SELECT vec_id, c_label AS bucket "
+        f"FROM ({rank_cells_sql('corpus', 'codebook')}) WHERE rn = 1"
+    )
+    want = sorted(
+        con.execute(ivf_serve_sql("inverted", "corpus", "queries", "codebook", 2, 2)).fetchall()
+    )
+    corpus = v.filter(F.col("vec_id") > 0)
+    inverted = (
+        _rank_cells(corpus, cb)
+        .filter(F.col("rn") == 1)
+        .select("vec_id", F.col("c_label").alias("bucket"))
+    )
+    got = sorted(map(tuple, _ivf_serve(inverted, corpus, q, cb, nprobe=2, k=2).collect()))
+    assert got == want
+    assert {t[0] for t in got} == {100, 101, 102}
+
+
 def test_ranged_running_sum_matches_global_window(spark):
     """ranged_running_sum's _cum equals the global ROWS running window
     it stands in for: on more splits than ranges, on key gaps that
