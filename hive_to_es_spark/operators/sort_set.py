@@ -806,7 +806,7 @@ def token_budget_mix(d: DataFrame) -> DataFrame:
         skey = _O14_NULL_KEY if src is None else src
         for pid, s in sorted(pids):
             carry_entries += [F.lit(f"{skey}|{pid}"), F.lit(acc)]
-            acc += s
+            acc += s or 0  # a range of NULL-text docs sums to NULL
     carry = F.element_at(
         F.create_map(*carry_entries),
         F.concat_ws(
@@ -815,11 +815,20 @@ def token_budget_mix(d: DataFrame) -> DataFrame:
     )
     # pass 2: within-range running sum + carry-in = exact per-source
     # cumulative token count in global hash order (a NULL source is one
-    # partition group like any other)
+    # partition group like any other). A NULL-text doc has a NULL tok;
+    # the global window's sum stays NULL until the first token, and a
+    # non-NULL text has at least one token, so a zero carry before a
+    # NULL within-range sum means no token came yet.
     w_run = Window.partitionBy("source", "_pid").orderBy(
         F.col("h").asc(), F.col("doc_id").asc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = ranged.withColumn("ctok", F.sum("tok").over(w_run) + carry)
+    within = F.sum("tok").over(w_run)
+    cum = ranged.withColumn(
+        "ctok",
+        F.when(within.isNull() & (carry == 0), F.lit(None)).otherwise(
+            F.coalesce(within, F.lit(0)) + carry
+        ),
+    )
     keep = F.col("ctok") <= F.col("budget_tok")
     b = F.broadcast(
         budgets.select(

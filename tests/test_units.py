@@ -2910,6 +2910,41 @@ def test_o14_null_source_stratum_kept(spark):
     assert None in got, "NULL-source stratum missing from the audit"
 
 
+def test_o14_null_text_matches_oracle(spark):
+    """o14 on NULL-text documents equals _O14_ORACLE: a NULL text has
+    a NULL token count, so doc 17 (alone in its hash range, after doc
+    27's non-empty range) takes the carry as its cumulative count and
+    is kept, doc 9 (first in book's hash order, alone in its range)
+    has no cumulative count, and doc 13 shares a range with doc 12.
+    Range groups holding only NULL-text docs once raised in the carry
+    loop."""
+    import duckdb
+    import pandas as pd
+
+    from hive_to_es_spark.operators.sort_set import _O14_ORACLE, token_budget_mix
+
+    rows = [
+        (27, "web", "a"),
+        (17, "web", None),
+        (22, "web", "a b c d e f g h i j"),
+        (12, "web", "b c"),
+        (13, "web", None),
+        (9, "book", None),
+        (25, "book", "m n"),
+        (10, "book", "x y z w v u t s"),
+    ]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "source", "text"]))
+    want = {r[0]: tuple(r[1:]) for r in con.execute(_O14_ORACLE).fetchall()}
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = {
+        r.source: (r.tok_total, r.budget_tok, r.n_kept, r.kept_tok)
+        for r in token_budget_mix(df).collect()
+    }
+    assert got == want
+    assert want == {"web": (13, 4, 2, 1), "book": (10, 4, 1, 2)}, want
+
+
 def test_t20_null_scores_route_to_drop(spark):
     """quantile_gate on a frame with NULL scores (round-11 ADVICE): a
     NULL score must surface as an explicit 'drop' row — the old
